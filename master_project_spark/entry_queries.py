@@ -41,8 +41,9 @@ def _tp(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
     inside a row group — so every regex/hash/UDF-heavy scan over
     documents/events executes on ONE task no matter the cluster size.
     Guide §2.5's remedy for unsplittable input: repartition immediately
-    after the read. Hash-partitioned on the table's unique key (balanced,
-    deterministic, and exempt from the keyless round-robin's
+    after the read. Hash-partitioned on a high-cardinality key of the
+    table — not necessarily a unique one (l_orderkey repeats per order) —
+    so balanced, deterministic, and exempt from the keyless round-robin's
     sort-before-repartition pass) and sized off defaultParallelism, so it
     scales with the cluster instead of encoding the local core count.
     Row-wise maps and aggregations are partitioning-independent, so
@@ -943,8 +944,8 @@ SELECT doc_id, octet_length(encode(text)) AS n_bytes,
 """)
 def multimodal_binary_meta(spark, sf_dir):
     """Multimodal plumbing: treat content as opaque bytes with typed
-    metadata (byte length + content hash); the decode path is the stubbed
-    pandas UDF in operators/multimodal.py."""
+    metadata (byte length + content hash), computed by the JVM's
+    octet_length and md5 — no decode."""
     return (
         _tp(spark, sf_dir, "documents", "doc_id")
         .select("doc_id", F.octet_length("text").alias("n_bytes"),

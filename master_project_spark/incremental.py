@@ -14,13 +14,15 @@ Design (round-2 rework per VERDICT #2 / ADVICE):
   owning batch, so conversations whose turn count changed are DETECTED and
   re-extracted (previously they were silently dropped — sibling tables
   diverged).
-- An append writes ONE new batch partition (the delta) via dynamic
-  partition overwrite, and rewrites ONLY the old partitions that contained
-  re-processed conversations (their stale rows are dropped by an anti-join).
+- An append writes ONE new batch partition (the delta) through
+  TableIO.commit's partition-replacing mode, and rewrites ONLY the old
+  partitions that contained re-processed conversations (their stale rows
+  are dropped by an anti-join). Every derived table is built by the same
+  pipeline.py builder the full run uses.
   Work is O(delta + touched partitions); untouched partitions are never
   read or written — asserted by tests on file mtimes.
 - The batch id is a deterministic hash of the delta's conversation set, so
-  a crash-retry recomputes the SAME batch and the dynamic overwrite is
+  a crash-retry recomputes the SAME batch and the partition overwrite is
   idempotent — no duplicate rows can survive a retry (the round-1 design
   needed a full-table dropDuplicates for this; gone).
 - The ledger commits LAST (round-3 fix, ADVICE high): every other table —
@@ -52,9 +54,14 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .canonicalize import build_entity_map
+from .pipeline import (ALIAS_CAP, append_run_metrics, chunk_stage_df,
+                       conv_stats_df, corpus_df, edges_df, extracted_df,
+                       gated_turns, linked_mentions_df, mentions_df, nodes_df,
+                       surfaces_df, triples_df, verified_triples_df,
+                       verify_udf_for)
 from .tableio import TableIO
-from .udfs import (EXTRACTED_SCHEMA, canonical_key_udf, extract_turn_batches,
-                   make_verify_udf)
+from .udfs import canonical_key_udf
 
 LEDGER = "processed_convs"
 
@@ -81,31 +88,6 @@ def _batch_id(todo: DataFrame) -> str:
         .alias("s")).collect()[0]
     return "b" + hashlib.sha256(
         f"{row['n']}:{row['h']}:{row['s']}".encode()).hexdigest()[:12]
-
-
-def _dynamic_overwrite(io: TableIO, name: str, df: DataFrame,
-                       snapshot: str,
-                       expect_batches: list[str] | None = None) -> None:
-    """Overwrite ONLY the batch partitions present in df; manifest
-    invalidate-first then rewrite (same crash contract as TableIO.commit).
-
-    ``expect_batches``: partitions whose content this write REDEFINES even
-    if the new content is empty — dynamic overwrite skips partitions absent
-    from df, so a touched partition whose rows were all removed would
-    otherwise keep its stale files. Those directories are deleted after the
-    write (before the manifest — a crash in between leaves the table
-    uncommitted, never wrong)."""
-    import shutil
-
-    df = df.localCheckpoint(eager=True)  # also breaks self-read-overwrite
-    present = {r["batch"] for r in df.select("batch").distinct().collect()}
-    io._manifest_path(name).unlink(missing_ok=True)
-    (df.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch").parquet(str(io._data_dir(name))))
-    for b in set(expect_batches or ()) - present:
-        shutil.rmtree(io._data_dir(name) / f"batch={b}", ignore_errors=True)
-    io.write_manifest(name, snapshot, schema=df.schema.jsonValue())
 
 
 def append_new_conversations(spark: SparkSession, transcripts: DataFrame,
@@ -147,6 +129,13 @@ def append_new_conversations(spark: SparkSession, transcripts: DataFrame,
                      .filter("old_batch IS NOT NULL")
                      .select("old_batch").distinct().collect())
 
+    def commit(name: str, df: DataFrame) -> None:
+        """Replace the delta batch and the touched old partitions of
+        ``name`` (TableIO.commit's partition-replacing mode). The
+        checkpoint breaks ``df``'s read of the table it replaces."""
+        io.commit(df.localCheckpoint(eager=True), name, snapshot,
+                  partition_by=["batch"], replace_partitions=touched)
+
     def rewrite(name: str, delta_df: DataFrame) -> None:
         """delta batch + anti-joined rewrite of touched old partitions."""
         full = delta_df
@@ -156,85 +145,41 @@ def append_new_conversations(spark: SparkSession, transcripts: DataFrame,
                    .join(todo_ids, "conv_id", "left_anti")
                    .select(*delta_df.columns))
             full = full.unionByName(old)
-        _dynamic_overwrite(io, name, full, snapshot,
-                           expect_batches=touched)
+        commit(name, full)
+
+    def changed(name: str) -> DataFrame:
+        """The committed delta + rewritten old partitions of ``name``."""
+        return io.read(spark, name).filter(
+            F.col("batch").isin([batch] + touched))
 
     # ---- extract ONLY the delta conversations (same JVM cue-gate
     # prefilter as the full pipeline: gate-rejected turns emit no rows)
-    from .pipeline import cue_prefilter_condition
-    delta_turns = transcripts.join(todo_ids, "conv_id", "left_semi") \
-        .select("conv_id", "turn_idx", "ts", "text")
-    pre = cue_prefilter_condition(spark)
-    if pre is not None:
-        delta_turns = delta_turns.filter(pre)
-    delta_turns = delta_turns.repartition(n_part, "conv_id", "turn_idx")
-    delta_ex = (delta_turns.mapInPandas(extract_turn_batches, EXTRACTED_SCHEMA)
-                .withColumn("batch", F.lit(batch)))
-    rewrite("extracted", delta_ex)
+    delta_transcripts = transcripts.join(todo_ids, "conv_id", "left_semi")
+    delta_turns = gated_turns(spark, delta_transcripts) \
+        .repartition(n_part, "conv_id", "turn_idx")
+    rewrite("extracted",
+            extracted_df(delta_turns).withColumn("batch", F.lit(batch)))
 
     # ---- derived per-conversation tables: project the changed partitions
     # of the committed extracted table (delta + rewritten old batches)
-    changed = io.read(spark, "extracted").filter(
-        F.col("batch").isin([batch] + touched))
-    new_rows = changed.filter(F.col("batch") == batch).count()
-
-    tr_cols = ["conv_id", "turn_idx", "ts", "subj", "pred", "obj",
-               "confidence", "mtype", "batch"]
-    _dynamic_overwrite(io, "triples",
-                       changed.filter(F.col("kind") == "T").select(*tr_cols),
-                       snapshot, expect_batches=touched)
-    me_cols = ["conv_id", "turn_idx", "mention_id", "surface", "span_start",
-               "span_end", "mtype", "batch"]
-    _dynamic_overwrite(io, "mentions",
-                       changed.filter(F.col("kind") == "M").select(*me_cols),
-                       snapshot, expect_batches=touched)
-
-    changed_mentions = io.read(spark, "mentions").filter(
-        F.col("batch").isin([batch] + touched))
-    _dynamic_overwrite(
-        io, "linked_mentions",
-        changed_mentions.join(
-            F.broadcast(alias_dict),
-            F.lower(F.col("surface")) == F.col("alias"), "left")
-        .select("conv_id", "turn_idx", "mention_id", "surface", "mtype",
-                "canonical_id",
-                F.coalesce(F.col("prior"), F.lit(0.0)).alias("link_score"),
-                "batch"),
-        snapshot, expect_batches=touched)
-
-    changed_triples = io.read(spark, "triples").filter(
-        F.col("batch").isin([batch] + touched))
+    changed_ex = changed("extracted")
+    new_rows = changed_ex.filter(F.col("batch") == batch).count()
+    commit("triples", triples_df(changed_ex))
+    commit("mentions", mentions_df(changed_ex))
+    commit("linked_mentions",
+           linked_mentions_df(changed("mentions"), alias_dict))
     if io.manifest("verified_triples") is not None:
-        from . import core
-        alias_set = frozenset(
-            r["alias"] for r in alias_dict.select("alias").distinct().collect())
-        verify_udf = make_verify_udf(spark, alias_set)
-        _dynamic_overwrite(
-            io, "verified_triples",
-            changed_triples.filter(
-                verify_udf(F.col("obj"), F.col("mtype"))
-                & ((F.col("subj") == core.SELF_SUBJECT)
-                   | verify_udf(F.col("subj"), F.col("mtype")))),
-            snapshot, expect_batches=touched)
+        commit("verified_triples",
+               verified_triples_df(changed("triples"),
+                                   verify_udf_for(spark, alias_dict)))
 
     # ---- conversation-level tables (chunks/corpus/conv_stats/ledger):
     # recompute the DELTA conversations only + touched-partition rewrite
-    from .pipeline import chunk_stage_df, conv_stats_df
-    delta_transcripts = transcripts.join(todo_ids, "conv_id", "left_semi")
     if io.manifest("chunks") is not None:
-        from . import core
         rewrite("chunks", chunk_stage_df(delta_transcripts)
                 .withColumn("batch", F.lit(batch)))
         if io.manifest("corpus") is not None:
-            alternation = core.keyword_alternation(
-                core.DATASET_KEYWORDS + core.BASELINE_KEYWORDS)
-            changed_chunks = io.read(spark, "chunks").filter(
-                F.col("batch").isin([batch] + touched))
-            _dynamic_overwrite(
-                io, "corpus",
-                changed_chunks.filter(
-                    F.col("chunk_text").rlike(alternation)),
-                snapshot, expect_batches=touched)
+            commit("corpus", corpus_df(changed("chunks")))
     if io.manifest("conv_stats") is not None:
         cs = conv_stats_df(delta_transcripts)
         committed_cols = io.read(spark, "conv_stats").columns
@@ -271,26 +216,17 @@ def append_new_conversations(spark: SparkSession, transcripts: DataFrame,
         "graph_rebuilt": rebuilt,
         "wall_ms": round((time.perf_counter() - t0) * 1000, 3),
     }
-    spark.createDataFrame(
-        [("incremental", "incremental_append", batch, False, int(new_rows),
-          len(touched), metrics["wall_ms"], json.dumps(metrics))],
-        "run_id string, stage string, snapshot_id string, skipped boolean, "
-        "rows_out long, n_files int, wall_ms double, files_json string",
-    ).write.mode("append").parquet(f"{out_dir}/run_metrics")
+    append_run_metrics(spark, out_dir, [{
+        "run_id": "incremental", "stage": "incremental_append",
+        "snapshot_id": batch, "skipped": False, "rows_out": new_rows,
+        "n_files": len(touched), "wall_ms": metrics["wall_ms"],
+        "files_json": json.dumps(metrics)}])
     return metrics
 
 
 # ---------------------------------------------------------------------------
 # Graph-table maintenance
 # ---------------------------------------------------------------------------
-
-def _surfaces_of(triples: DataFrame, mentions: DataFrame) -> DataFrame:
-    from . import core
-    return (mentions.select("surface")
-            .union(triples.filter(F.col("subj") != core.SELF_SUBJECT)
-                   .select(F.col("subj").alias("surface")))
-            .distinct())
-
 
 def _merge_graph(spark: SparkSession, io: TableIO, alias_dict: DataFrame,
                  batch: str, touched: list[str],
@@ -336,7 +272,7 @@ def _merge_graph(spark: SparkSession, io: TableIO, alias_dict: DataFrame,
 
     if have_graph and not touched:
         entity_map = io.read(spark, "entity_map").drop("batch")
-        new_surfaces = (_surfaces_of(delta_triples, delta_mentions)
+        new_surfaces = (surfaces_df(delta_triples, delta_mentions)
                         .join(entity_map.select("surface"), "surface",
                               "left_anti")
                         .localCheckpoint(eager=True))
@@ -411,7 +347,8 @@ def _incremental_graph_merge(spark, io, alias_dict, batch,
                     F.lit(batch).alias("batch"))
                 .localCheckpoint(eager=True))
     if assigned.count() > 0:
-        _dynamic_overwrite(io, "entity_map", assigned, snapshot)
+        io.commit(assigned, "entity_map", snapshot, partition_by=["batch"],
+                  replace_partitions=[])
     em_full = io.read(spark, "entity_map").drop("batch") \
         .localCheckpoint(eager=True)
 
@@ -432,10 +369,9 @@ def _incremental_graph_merge(spark, io, alias_dict, batch,
     # degrades to a documented lower bound (greatest of the inputs and
     # the merged sample size) — overflow stays visible, never fatal.
     if not _done("nodes"):
-        from .pipeline import ALIAS_CAP, node_aggregates
         delta_linked = io.read(spark, "linked_mentions").filter(
             F.col("batch") == batch)
-        new_nodes = node_aggregates(delta_linked.join(em_full, "surface"))
+        new_nodes = nodes_df(delta_linked, em_full)
         old_nodes = io.read(spark, "nodes")
         empty_arr = F.expr("cast(array() as array<string>)")
         merged_set = F.array_distinct(F.concat(
@@ -468,7 +404,7 @@ def _incremental_graph_merge(spark, io, alias_dict, batch,
     # merge algebraically (weight/sum/min/max are mergeable; the stored
     # 6-dp avg_confidence merges weighted, drift <= 5e-7 per merge)
     if not _done("edges"):
-        new_edges = _edges_from(delta_triples.drop("batch"), em_full)
+        new_edges = edges_df(delta_triples.drop("batch"), em_full)
         old_edges = io.read(spark, "edges")
         w_o = F.coalesce("o.weight", F.lit(0))
         w_n = F.coalesce("n.weight", F.lit(0))
@@ -487,28 +423,6 @@ def _incremental_graph_merge(spark, io, alias_dict, batch,
         io.commit(merged_edges, "edges", snapshot)
 
 
-def _edges_from(triples: DataFrame, entity_map: DataFrame) -> DataFrame:
-    from . import core
-    em_subj = entity_map.select(F.col("surface").alias("subj"),
-                                F.col("entity_id").alias("src"))
-    em_obj = entity_map.select(F.col("surface").alias("obj"),
-                               F.col("entity_id").alias("dst"))
-    t = (triples
-         .withColumn("self_src", F.concat(F.lit("conv:"), F.col("conv_id")))
-         .join(em_subj, "subj", "left")
-         .join(em_obj, "obj", "left"))
-    return (t.select(
-        F.when(F.col("subj") == core.SELF_SUBJECT, F.col("self_src"))
-        .otherwise(F.coalesce(F.col("src"), F.col("subj"))).alias("src"),
-        F.coalesce(F.col("dst"), F.col("obj")).alias("dst"),
-        "pred", "ts", "confidence")
-        .groupBy("src", "dst", "pred")
-        .agg(F.count(F.lit(1)).alias("weight"),
-             F.round(F.avg("confidence"), 6).alias("avg_confidence"),
-             F.min("ts").alias("first_ts"),
-             F.max("ts").alias("last_ts")))
-
-
 def _rebuild_graph_full(spark, io, alias_dict, batch: str) -> None:
     """Global re-canonicalization: full MinHash-LSH + CC over all surfaces,
     then nodes/edges from scratch. Runs on rewrites (removals break the
@@ -522,23 +436,16 @@ def _rebuild_graph_full(spark, io, alias_dict, batch: str) -> None:
     finish the rebuild, never algebraically merge onto them (ADVICE
     round-3 high: with a shared tag the retry's anti-join found 0 new
     surfaces and silently merged delta edges onto pre-rebuild entity ids)."""
-    from .canonicalize import build_entity_map
     snapshot = f"incremental:{batch}"
 
     triples = io.read(spark, "triples").drop("batch")
     mentions = io.read(spark, "mentions").drop("batch")
     linked = io.read(spark, "linked_mentions").drop("batch")
 
-    entity_map, _ = build_entity_map(_surfaces_of(triples, mentions),
+    entity_map, _ = build_entity_map(surfaces_df(triples, mentions),
                                      alias_dict)
-    io._manifest_path("entity_map").unlink(missing_ok=True)
-    (entity_map.withColumn("batch", F.lit(batch))
-     .write.mode("overwrite").partitionBy("batch")
-     .parquet(str(io._data_dir("entity_map"))))
-    io.write_manifest("entity_map", f"rebuild:{batch}")
+    io.commit(entity_map.withColumn("batch", F.lit(batch)), "entity_map",
+              f"rebuild:{batch}", partition_by=["batch"])
     entity_map = io.read(spark, "entity_map").drop("batch")
-
-    from .pipeline import node_aggregates
-    io.commit(node_aggregates(linked.join(entity_map, "surface")),
-              "nodes", snapshot)
-    io.commit(_edges_from(triples, entity_map), "edges", snapshot)
+    io.commit(nodes_df(linked, entity_map), "nodes", snapshot)
+    io.commit(edges_df(triples, entity_map), "edges", snapshot)

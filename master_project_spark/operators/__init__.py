@@ -1,4 +1,4 @@
 """Reusable large-scale data-pipeline operators (dedup, similarity search,
-text analysis, multimodal plumbing) built Spark-first: JVM expressions where
-possible, Arrow-batched pandas UDFs where not.
+text analysis, retrieval) built Spark-first: JVM expressions where possible,
+Arrow-batched pandas UDFs where not.
 """

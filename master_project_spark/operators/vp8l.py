@@ -8,15 +8,9 @@ codes (entropy image), and all four transforms (predictor, color,
 subtract-green, color-indexing with pixel packing), inverted in reverse
 read order.
 
-Reference-parity note: the reference repo treats media as opaque binary
-payloads (SURVEY §2 multimodal rows); this decoder replaces the
-content-hash luma stand-in for the VP8L flavor the same way the Annex-F
-decoder did for baseline JPEG (multimodal._decode_jpeg). Lossy VP8
-(boolean arithmetic coder) remains behind the documented stand-in seam.
-
-Like the JPEG path, this is a correctness/tooling surface, not a hot
-path: image decode runs inside mapInPandas on bounded-size payloads and
-is fenced to <= 4 Mpx by the caller (multimodal._decode_image).
+Standalone: no pipeline stage, contract query or benchmark imports it.
+It is the last piece of the removed media-codec stack, kept with its
+tests until a later change deletes it (ROADMAP item 2).
 """
 from __future__ import annotations
 

@@ -208,6 +208,126 @@ def chunk_stage_df(transcripts: DataFrame,
     return small.unionByName(big)
 
 
+# ---- table builders, shared by run_pipeline and the incremental append
+# (incremental.py): each derived table has exactly one definition
+
+def gated_turns(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
+    """The extract stage's input: turns the JVM cue gate cannot reject
+    (gate-rejected turns emit no extract rows, so they never reach
+    Arrow)."""
+    turns = transcripts.select("conv_id", "turn_idx", "ts", "text")
+    pre = cue_prefilter_condition(spark)
+    return turns if pre is None else turns.filter(pre)
+
+
+def extracted_df(turns: DataFrame) -> DataFrame:
+    """ONE pandas pass emits both triple and mention rows (kind column);
+    splitting into tables is JVM-side filter+project."""
+    return turns.mapInPandas(extract_turn_batches, EXTRACTED_SCHEMA)
+
+
+def triples_df(extracted: DataFrame) -> DataFrame:
+    return extracted.filter(F.col("kind") == "T") \
+        .select("conv_id", "turn_idx", "ts", "subj", "pred", "obj",
+                "confidence", "mtype", "batch")
+
+
+def mentions_df(extracted: DataFrame) -> DataFrame:
+    return extracted.filter(F.col("kind") == "M") \
+        .select("conv_id", "turn_idx", "mention_id", "surface",
+                "span_start", "span_end", "mtype", "batch")
+
+
+def verify_udf_for(spark: SparkSession, alias_dict: DataFrame):
+    """Verification (VERDICT gap #2): every triple's entities pass the
+    offline verifier before they count (verify_entity,
+    ent_extraction.py:344-355) — broadcast alias vocabulary + vectorized
+    shared-core check. Collects the alias vocabulary to the driver."""
+    alias_set = frozenset(
+        r["alias"] for r in alias_dict.select("alias").distinct().collect())
+    return make_verify_udf(spark, alias_set)
+
+
+def verified_triples_df(triples: DataFrame, verify_udf) -> DataFrame:
+    """'self' subjects are exempt (the speaking agent, not an extracted
+    candidate)."""
+    return triples.filter(
+        verify_udf(F.col("obj"), F.col("mtype"))
+        & ((F.col("subj") == core.SELF_SUBJECT)
+           | verify_udf(F.col("subj"), F.col("mtype"))))
+
+
+def linked_mentions_df(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """Linking: mentions x broadcast(alias_dict) (J6 — broadcast hash join,
+    no shuffle on the skewed surface side)."""
+    return (mentions.join(
+        F.broadcast(alias_dict),
+        F.lower(F.col("surface")) == F.col("alias"), "left")
+        .select("conv_id", "turn_idx", "mention_id", "surface", "mtype",
+                "canonical_id",
+                F.coalesce(F.col("prior"), F.lit(0.0)).alias("link_score"),
+                "batch"))
+
+
+def corpus_df(chunks: DataFrame) -> DataFrame:
+    """The P1 keyword filter, kept BEFORE anything expensive downstream (the
+    hand-held pushdown Catalyst can't do across opaque UDFs)."""
+    alternation = core.keyword_alternation(core.DATASET_KEYWORDS
+                                           + core.BASELINE_KEYWORDS)
+    return chunks.filter(F.col("chunk_text").rlike(alternation))
+
+
+def surfaces_df(triples: DataFrame, mentions: DataFrame) -> DataFrame:
+    """Distinct entity surfaces: every mention plus every non-self triple
+    subject — the canonicalization input."""
+    return (mentions.select("surface")
+            .union(triples.filter(F.col("subj") != core.SELF_SUBJECT)
+                   .select(F.col("subj").alias("surface")))
+            .distinct())
+
+
+def nodes_df(linked: DataFrame, entity_map: DataFrame) -> DataFrame:
+    return node_aggregates(linked.join(entity_map, "surface"))
+
+
+def edges_df(triples: DataFrame, entity_map: DataFrame) -> DataFrame:
+    """(src, dst, pred) aggregates of the triples through the entity map;
+    a 'self' subject becomes its conversation node."""
+    em_subj = entity_map.select(
+        F.col("surface").alias("subj"), F.col("entity_id").alias("src"))
+    em_obj = entity_map.select(
+        F.col("surface").alias("obj"), F.col("entity_id").alias("dst"))
+    t = (triples
+         .withColumn("self_src", F.concat(F.lit("conv:"), F.col("conv_id")))
+         .join(em_subj, "subj", "left")
+         .join(em_obj, "obj", "left"))
+    return (
+        t.select(
+            F.when(F.col("subj") == core.SELF_SUBJECT, F.col("self_src"))
+            .otherwise(F.coalesce(F.col("src"), F.col("subj"))).alias("src"),
+            F.coalesce(F.col("dst"), F.col("obj")).alias("dst"),
+            "pred", "ts", "confidence")
+        .groupBy("src", "dst", "pred")
+        .agg(F.count(F.lit(1)).alias("weight"),
+             F.round(F.avg("confidence"), 6).alias("avg_confidence"),
+             F.min("ts").alias("first_ts"),
+             F.max("ts").alias("last_ts"))
+    )
+
+
+def append_run_metrics(spark: SparkSession, out_dir: str,
+                       rows: list[dict]) -> None:
+    """Append rows to the run_metrics table (plain parquet append: a log,
+    not a snapshot-committed stage)."""
+    spark.createDataFrame(
+        [(m["run_id"], m["stage"], m["snapshot_id"], bool(m["skipped"]),
+          int(m["rows_out"]), int(m["n_files"]), float(m["wall_ms"]),
+          m["files_json"]) for m in rows],
+        "run_id string, stage string, snapshot_id string, skipped boolean, "
+        "rows_out long, n_files int, wall_ms double, files_json string",
+    ).write.mode("append").parquet(f"{out_dir}/run_metrics")
+
+
 @dataclass
 class PipelineResult:
     run_id: str
@@ -348,14 +468,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # partitioning is too coarse (parquet splits are row-balanced regardless
     # of conv_id skew). When we must, hash on the FULL (conv_id, turn_idx)
     # key — balanced even under Zipf conversations.
-    # ONE pandas pass emits both triple and mention rows (kind column);
-    # splitting into tables is JVM-side filter+project.
-    turns = transcripts.select("conv_id", "turn_idx", "ts", "text")
-    # JVM cue-gate prefilter: gate-rejected turns never reach Arrow. Placed
-    # BEFORE the repartition so the shuffle moves only surviving rows.
-    pre = cue_prefilter_condition(spark)
-    if pre is not None:
-        turns = turns.filter(pre)
+    # JVM cue-gate prefilter BEFORE the repartition, so the shuffle moves
+    # only surviving rows.
+    turns = gated_turns(spark, transcripts)
     # partition-count probe without building an RDD conversion plan for the
     # common file-backed case: inputFiles() is a metadata-only lookup
     # (parquet scans split at maxPartitionBytes, so n_files lower-bounds the
@@ -382,8 +497,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # bottleneck, BENCH/BASELINE.md)
     wave1 = [
         ("extracted",
-         lambda: turns.mapInPandas(extract_turn_batches, EXTRACTED_SCHEMA)
-         .withColumn("batch", F.lit(batch_token)),
+         lambda: extracted_df(turns).withColumn("batch", F.lit(batch_token)),
          {"partition_by": ["batch"]}),
         ("conv_stats",
          lambda: conv_stats_df(transcripts)
@@ -407,54 +521,17 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # ---- wave 2: projections of wave-1 outputs (all independent).
     # processed_convs = the conversation ledger seeding incremental
     # appends; n_turns lets it DETECT conversations that grew after
-    # processing (re-extracted, not silently dropped). corpus = the P1
-    # keyword filter kept BEFORE anything expensive downstream (the
-    # hand-held pushdown Catalyst can't do across opaque UDFs).
-    alternation = core.keyword_alternation(core.DATASET_KEYWORDS
-                                           + core.BASELINE_KEYWORDS)
-
-    # projections of the committed extraction, shared by the commit stages
-    # AND the wave-2 consumers below (r6: verification / linking /
-    # canonicalization used to wait for the triples/mentions COMMITS and
-    # then re-read them — but a filter of the committed `extracted` table
-    # is row-identical to reading the committed filter output, so all
-    # seven stages are independent and run as ONE concurrent wave,
-    # removing a full wave of commit latency from the critical path)
-    def _triples_proj():
-        return extracted.filter(F.col("kind") == "T") \
-            .select("conv_id", "turn_idx", "ts", "subj", "pred", "obj",
-                    "confidence", "mtype", "batch")
-
-    def _mentions_proj():
-        return extracted.filter(F.col("kind") == "M") \
-            .select("conv_id", "turn_idx", "mention_id", "surface",
-                    "span_start", "span_end", "mtype", "batch")
-
-    # Verification (VERDICT gap #2): every triple's entities pass the
-    # offline verifier before they count (verify_entity,
-    # ent_extraction.py:344-355) — broadcast alias vocabulary + vectorized
-    # shared-core check; 'self' subjects are exempt (the speaking agent,
-    # not an extracted candidate).
-    alias_set = frozenset(
-        r["alias"] for r in alias_dict.select("alias").distinct().collect())
-    verify_udf = make_verify_udf(spark, alias_set)
-
-    def _verified_triples():
-        return _triples_proj().filter(
-            verify_udf(F.col("obj"), F.col("mtype"))
-            & ((F.col("subj") == core.SELF_SUBJECT)
-               | verify_udf(F.col("subj"), F.col("mtype"))))
-
-    # linking: mentions x broadcast(alias_dict) (J6 — broadcast hash join,
-    # no shuffle on the skewed surface side)
-    def _linked():
-        return (_mentions_proj().join(
-            F.broadcast(alias_dict),
-            F.lower(F.col("surface")) == F.col("alias"), "left")
-            .select("conv_id", "turn_idx", "mention_id", "surface", "mtype",
-                    "canonical_id",
-                    F.coalesce(F.col("prior"), F.lit(0.0)).alias("link_score"),
-                    "batch"))
+    # processing (re-extracted, not silently dropped).
+    #
+    # triples/mentions are projections of the committed extraction, shared
+    # by the commit stages AND the wave-2 consumers below (r6: verification
+    # / linking / canonicalization used to wait for the triples/mentions
+    # COMMITS and then re-read them — but a filter of the committed
+    # `extracted` table is row-identical to reading the committed filter
+    # output, so all seven stages are independent and run as ONE
+    # concurrent wave, removing a full wave of commit latency from the
+    # critical path)
+    verify_udf = verify_udf_for(spark, alias_dict)
 
     # canonicalization (LSH + CC) also only needs the extraction output;
     # its driver-loop convergence probes are latency-bound and overlap
@@ -462,25 +539,25 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     canon_info = {"n_dropped_buckets": 0}
 
     def _entity_map():
-        surfaces = (
-            _mentions_proj().select("surface")
-            .union(_triples_proj()
-                   .filter(F.col("subj") != core.SELF_SUBJECT)
-                   .select(F.col("subj").alias("surface")))
-            .distinct())
-        em, n_dropped = build_entity_map(surfaces, alias_dict)
+        em, n_dropped = build_entity_map(
+            surfaces_df(triples_df(extracted), mentions_df(extracted)),
+            alias_dict)
         canon_info["n_dropped_buckets"] = n_dropped
         return em.withColumn("batch", F.lit(batch_token))
 
     wave2 = [
-        ("triples", _triples_proj, {"partition_by": ["batch"]}),
-        ("mentions", _mentions_proj, {"partition_by": ["batch"]}),
+        ("triples", lambda: triples_df(extracted),
+         {"partition_by": ["batch"]}),
+        ("mentions", lambda: mentions_df(extracted),
+         {"partition_by": ["batch"]}),
         ("processed_convs",
          lambda: tables_conv_stats.select("conv_id", "n_turns", "batch"),
          {"partition_by": ["batch"]}),
-        ("verified_triples", _verified_triples,
+        ("verified_triples",
+         lambda: verified_triples_df(triples_df(extracted), verify_udf),
          {"extra": alias_fp, "partition_by": ["batch"]}),
-        ("linked_mentions", _linked,
+        ("linked_mentions",
+         lambda: linked_mentions_df(mentions_df(extracted), alias_dict),
          {"extra": alias_fp, "partition_by": ["batch"]}),
         ("entity_map", _entity_map,
          {"extra": alias_fp, "partition_by": ["batch"]}),
@@ -489,7 +566,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         chunks_b = w1["chunks"]
         wave2.append((
             "corpus",
-            lambda: chunks_b.filter(F.col("chunk_text").rlike(alternation)),
+            lambda: corpus_df(chunks_b),
             {"partition_by": ["batch"]}))
     w2 = st.run_group(wave2)
     triples = w2["triples"].drop("batch")
@@ -547,34 +624,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                 "chunk_embeddings", lambda: embed_cache.df, extra=alias_fp)
 
     # ---- graph materialization
-    def _nodes():
-        return node_aggregates(linked.join(entity_map, "surface"))
-    # (definition below; committed together with edges in one wave)
-
-    def _edges():
-        em_subj = entity_map.select(
-            F.col("surface").alias("subj"), F.col("entity_id").alias("src"))
-        em_obj = entity_map.select(
-            F.col("surface").alias("obj"), F.col("entity_id").alias("dst"))
-        t = (triples
-             .withColumn("self_src", F.concat(F.lit("conv:"), F.col("conv_id")))
-             .join(em_subj, "subj", "left")
-             .join(em_obj, "obj", "left"))
-        return (
-            t.select(
-                F.when(F.col("subj") == core.SELF_SUBJECT, F.col("self_src"))
-                .otherwise(F.coalesce(F.col("src"), F.col("subj"))).alias("src"),
-                F.coalesce(F.col("dst"), F.col("obj")).alias("dst"),
-                "pred", "ts", "confidence")
-            .groupBy("src", "dst", "pred")
-            .agg(F.count(F.lit(1)).alias("weight"),
-                 F.round(F.avg("confidence"), 6).alias("avg_confidence"),
-                 F.min("ts").alias("first_ts"),
-                 F.max("ts").alias("last_ts"))
-        )
     w5 = st.run_group([
-        ("nodes", _nodes, {"extra": alias_fp}),
-        ("edges", _edges, {"extra": alias_fp}),
+        ("nodes", lambda: nodes_df(linked, entity_map), {"extra": alias_fp}),
+        ("edges", lambda: edges_df(triples, entity_map), {"extra": alias_fp}),
     ])
     tables["nodes"] = w5["nodes"]
     tables["edges"] = w5["edges"]
@@ -631,13 +683,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
             "n_files": 0, "wall_ms": 0.0,
             "files_json": json.dumps(fixpoint_info),
         })
-    metrics_df = spark.createDataFrame(
-        [(m["run_id"], m["stage"], m["snapshot_id"], bool(m["skipped"]),
-          int(m["rows_out"]), int(m["n_files"]), float(m["wall_ms"]),
-          m["files_json"]) for m in st.metrics],
-        "run_id string, stage string, snapshot_id string, skipped boolean, "
-        "rows_out long, n_files int, wall_ms double, files_json string")
-    metrics_df.write.mode("append").parquet(f"{out_dir}/run_metrics")
+    append_run_metrics(spark, out_dir, st.metrics)
     tables["run_metrics"] = spark.read.parquet(f"{out_dir}/run_metrics")
 
     return PipelineResult(run_id=run_id, out_dir=out_dir, tables=tables,

@@ -90,7 +90,7 @@ def get_spark(cores: int | None = None, app_name: str = "master_project_spark",
         # @2000 (-8%), with 500 over-fragmenting (106.7 s). Wide
         # configurations benefit most — exactly the production shape.
         # Callers with very wide rows (binary media) should lower it
-        # further via extra_conf (operators/multimodal.py docstring).
+        # further via extra_conf.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
@@ -114,64 +114,11 @@ def get_spark(cores: int | None = None, app_name: str = "master_project_spark",
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _silence_python_accumulator_noise(spark)
-    _warm_python_worker_pool(spark)
     return spark
 
 
-#: application ids whose Python worker pool has been pre-forked
-_WARMED: set[str] = set()
-
-
-def _warm_python_worker_pool(spark: SparkSession) -> None:
-    """Warm session infrastructure at session start (once per
-    SparkContext), moving one-time costs to where the JVM-spinup cost
-    already lives instead of charging them to whichever QUERY happens to
-    exercise each code path first:
-
-    - pre-fork the Python worker pool: the first Arrow/pandas stage
-      otherwise pays one fork + pandas/pyarrow import per worker —
-      measured 4-5 s at 32 cores;
-    - one tiny parquet write+read roundtrip on tmpfs: loads the parquet
-      reader/writer + output-committer classes and their JIT — measured
-      2.6 s off the first parquet-scanning query of a fresh session.
-
-    This touches NO query input data and caches no results: it is the
-    warm-pool / warm-classpath state a long-running executor has
-    naturally (spark.python.worker.reuse keeps the forked workers
-    alive). Opt out with SPARK_GRAFT_NO_WORKER_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WORKER_WARMUP") == "1":
-        return
-    sc = spark.sparkContext
-    if sc.applicationId in _WARMED:
-        return
-    _WARMED.add(sc.applicationId)
-    try:
-        import shutil
-        import tempfile
-
-        import pandas as pd
-        from pyspark.sql.functions import col, pandas_udf
-
-        @pandas_udf("long")
-        def _touch(s: pd.Series) -> pd.Series:
-            return s
-
-        n = sc.defaultParallelism
-        sc.setJobDescription("session warmup: pre-fork python workers")
-        spark.range(n, numPartitions=n).select(_touch(col("id"))) \
-            .write.mode("overwrite").format("noop").save()
-        sc.setJobDescription("session warmup: parquet/committer classload")
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        d = tempfile.mkdtemp(prefix="mps_warm_", dir=base)
-        try:
-            spark.range(8).write.mode("overwrite").parquet(f"{d}/pq")
-            spark.read.parquet(f"{d}/pq").write.mode("overwrite") \
-                .format("noop").save()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-        sc.setJobDescription(None)
-    except Exception:
-        pass  # warmup is best-effort; the cost just moves back per-query
+#: application ids whose log filter is installed
+_LOG_FILTERED: set[str] = set()
 
 
 def _silence_python_accumulator_noise(spark: SparkSession) -> None:
@@ -197,9 +144,9 @@ def _silence_python_accumulator_noise(spark: SparkSession) -> None:
     The filter is surgical: a log4j2 RegexFilter DENYing only messages
     starting 'Failed to update accumulator' on the root logger config —
     every other DAGScheduler (and any other) error still logs. Installed
-    once per SparkContext (guarded like the warmup — getOrCreate returns
-    live sessions, and stacking one filter per get_spark call would grow
-    the root logger's filter chain unboundedly), before the first job, so
+    once per SparkContext (getOrCreate returns live sessions, and stacking
+    one filter per get_spark call would grow the root logger's filter
+    chain unboundedly), before the first job, so
     no real event window is lost. If the process DOES hold registered
     Python accumulators (aid=-1 is pyspark's own UDF-profiler slot,
     registered unconditionally but fed only under spark.python.profile;
@@ -210,9 +157,9 @@ def _silence_python_accumulator_noise(spark: SparkSession) -> None:
     logging untouched."""
     try:
         sc = spark.sparkContext
-        if ("logfilter:" + sc.applicationId) in _WARMED:
+        if sc.applicationId in _LOG_FILTERED:
             return
-        _WARMED.add("logfilter:" + sc.applicationId)
+        _LOG_FILTERED.add(sc.applicationId)
         from pyspark.accumulators import _accumulatorRegistry
         if not set(_accumulatorRegistry) <= {-1}:
             return   # real Python accumulators exist: keep the errors loud

@@ -21,6 +21,7 @@ is clobbered — the manifest must never outlive the data it describes.
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from pathlib import Path
 
@@ -136,19 +137,41 @@ class TableIO:
         return manifest.get("snapshot_id") == snapshot_id
 
     def commit(self, df: DataFrame, name: str, snapshot_id: str,
-               partition_by: list[str] | None = None) -> dict:
-        """Write parquet, then the manifest (the commit point). Returns the
-        manifest, including per-file (== per output partition) row counts —
-        the lineage record."""
+               partition_by: list[str] | None = None,
+               replace_partitions: list[str] | None = None) -> dict:
+        """Write parquet, then the manifest (the commit point) — the only
+        writer of a ``_manifest.json``. Returns the manifest, including
+        per-file (== per output partition) row counts — the lineage record.
+
+        ``replace_partitions=None`` replaces the whole table. A list selects
+        the partition-replacing mode the incremental append uses: only the
+        partitions of the single ``partition_by`` column present in ``df``
+        are overwritten, and each listed partition absent from ``df`` is
+        removed — its content is redefined as empty (a touched partition
+        whose rows were all dropped would otherwise keep its stale files).
+        The removal runs after the write and before the manifest, so a
+        crash in between leaves the table uncommitted, never wrong. ``df``
+        must not read the table it replaces (the incremental callers
+        localCheckpoint it first)."""
         path = self._data_dir(name)
+        stale: set = set()
+        if replace_partitions:
+            (col,) = partition_by
+            stale = set(replace_partitions) - {
+                r[0] for r in df.select(col).distinct().collect()}
         # invalidate FIRST: once the overwrite starts, the old manifest no
         # longer describes readable data; a kill mid-write must leave the
         # table uncommitted, not committed-but-clobbered
         self._manifest_path(name).unlink(missing_ok=True)
         writer = df.write.mode("overwrite")
+        if replace_partitions is not None:
+            writer = writer.option("partitionOverwriteMode", "dynamic")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(path))
+        for value in stale:
+            shutil.rmtree(path / f"{partition_by[0]}={value}",
+                          ignore_errors=True)
 
         # per-file (== per output partition) lineage from parquet footers —
         # a metadata-only operation, no Spark job (on a cluster this is the
@@ -166,27 +189,6 @@ class TableIO:
         tmp = self._manifest_path(name).with_suffix(".tmp")
         tmp.write_text(json.dumps(manifest, indent=1))
         tmp.replace(self._manifest_path(name))  # atomic commit
-        return manifest
-
-    def write_manifest(self, name: str, snapshot_id: str,
-                       schema: dict | None = None) -> dict:
-        """(Re)write a manifest for data already on disk (e.g. after an
-        append) in the same shape ``commit`` produces — per-file lineage
-        from parquet footers, no Spark job."""
-        path = self._data_dir(name)
-        files = _footer_lineage(path)
-        manifest = {
-            "table": name,
-            "snapshot_id": snapshot_id,
-            "rows": sum(f["rows"] for f in files),
-            "n_files": len(files),
-            "files": files,
-            "committed_at": time.time(),
-            "schema": schema,
-        }
-        tmp = self._manifest_path(name).with_suffix(".tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        tmp.replace(self._manifest_path(name))
         return manifest
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:

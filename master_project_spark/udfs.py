@@ -1,8 +1,8 @@
 """Vectorized pandas/Arrow UDF wrappers around the shared pure core.
 
 Per BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row
-Python) throughout" — every wrapper here is a Series-at-a-time pandas_udf, a
-mapInPandas batch iterator, or an applyInPandas grouped map. The heavy logic
+Python) throughout" — every wrapper here is a Series-at-a-time pandas_udf
+or a mapInPandas batch iterator. The heavy logic
 lives in ``core`` (shared with the oracle), so Spark and oracle cannot
 diverge.
 
@@ -32,16 +32,6 @@ TRIPLES_SCHEMA = T.StructType([
     T.StructField("pred", T.StringType()),
     T.StructField("obj", T.StringType()),
     T.StructField("confidence", T.DoubleType()),
-    T.StructField("mtype", T.StringType()),
-])
-
-MENTIONS_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("turn_idx", T.IntegerType()),
-    T.StructField("mention_id", T.IntegerType()),
-    T.StructField("surface", T.StringType()),
-    T.StructField("span_start", T.IntegerType()),
-    T.StructField("span_end", T.IntegerType()),
     T.StructField("mtype", T.StringType()),
 ])
 
@@ -147,45 +137,7 @@ def extract_triples_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Data
         yield pd.DataFrame(out)
 
 
-def extract_mentions_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: per-turn mention detection with spans."""
-    for pdf in batches:
-        out = {k: [] for k in ("conv_id", "turn_idx", "mention_id", "surface",
-                               "span_start", "span_end", "mtype")}
-        for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-            for m in core.extract_mentions(text or ""):
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(turn_idx)
-                out["mention_id"].append(m["mention_id"])
-                out["surface"].append(m["surface"])
-                out["span_start"].append(m["span_start"])
-                out["span_end"].append(m["span_end"])
-                out["mtype"].append(m["mtype"])
-        yield pd.DataFrame(out)
-
-
-# -------------------------------------------------- grouped chunking (W1)
-
-def chunk_conversation(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas grouped-map over conv_id: W1, the order-dependent
-    ragged chunker (texts.py:7-26,124-128). Spark does NOT guarantee
-    intra-group row order, so we sort by turn_idx inside (SURVEY §2.5 W2).
-
-    NOTE: kept for reference/tests; the pipeline uses chunk_text_udf over a
-    JVM-side sort_array(collect_list(...)) aggregate instead — one Arrow
-    batch covers MANY conversations, avoiding the per-group pandas-frame
-    overhead that dominates applyInPandas on millions of small groups."""
-    pdf = pdf.sort_values("turn_idx")
-    conv_id = pdf["conv_id"].iloc[0]
-    text = " ".join(t or "" for t in pdf["text"])
-    chunks = core.chunker(text, max_tokens=200, overlap=2)
-    return pd.DataFrame({
-        "conv_id": [conv_id] * len(chunks),
-        "chunk_idx": list(range(len(chunks))),
-        "chunk_text": chunks,
-    })
-
+# -------------------------------------------------- vectorized chunking (W1)
 
 @pandas_udf(T.ArrayType(T.StringType()))
 def chunk_text_udf(conv_texts: pd.Series) -> pd.Series:

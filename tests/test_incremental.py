@@ -4,7 +4,7 @@ final tables equal a from-scratch run over the full input."""
 from pyspark.sql import functions as F
 
 from master_project_spark.datagen import alias_df, transcripts_df
-from master_project_spark.incremental import append_new_conversations
+from master_project_spark.incremental import LEDGER, append_new_conversations
 from master_project_spark.pipeline import run_pipeline
 from master_project_spark.tableio import TableIO
 
@@ -46,6 +46,37 @@ def test_incremental_append_equals_full_run(spark, tmp_path):
     full_edges = sorted(map(tuple, full.tables["edges"]
                             .select("src", "dst", "pred", "weight").collect()))
     assert inc_edges == full_edges
+
+
+def test_first_append_without_mentions_equals_full_run(spark, tmp_path):
+    """A first append into an empty dir over turns with no entity mentions
+    commits empty graph tables that stay readable: the entity_map manifest
+    records its schema (an empty partitioned table has no data file to
+    infer one from), and every table equals the full pipeline's."""
+    import datetime
+
+    from master_project_spark.datagen import transcripts_spark_schema
+
+    ts = datetime.datetime(2024, 1, 1)
+    t = spark.createDataFrame(
+        [("c0", 0, "user", "hello there, how are you today?", None, ts),
+         ("c0", 1, "assistant", "thanks, that works for me.", None, ts),
+         ("c1", 0, "user", "ok, see you tomorrow.", None, ts)],
+        transcripts_spark_schema())
+    alias = alias_df(spark)
+    inc_dir, full_dir = str(tmp_path / "inc"), str(tmp_path / "full")
+    res = append_new_conversations(spark, t, inc_dir, alias)
+    assert res["new_convs"] == 2 and res["new_rows"] == 0
+    run_pipeline(spark, t, full_dir, alias, resume=False, with_chunks=False)
+
+    inc, full = TableIO(inc_dir), TableIO(full_dir)
+    assert inc.manifest("entity_map")["schema"] is not None
+    for name in ("extracted", "triples", "mentions", "linked_mentions",
+                 "entity_map", "nodes", "edges", LEDGER):
+        got = inc.read(spark, name).drop("batch")
+        want = full.read(spark, name).drop("batch")
+        assert got.schema == want.schema, name
+        assert sorted(got.collect()) == sorted(want.collect()), name
 
 
 def test_pipeline_seeds_ledger_for_incremental(spark, tmp_path):
@@ -381,10 +412,10 @@ def test_killed_rebuild_retry_finishes_rebuild_not_merge(spark, tmp_path,
 
     real_commit = TableIO.commit
 
-    def fail_on_nodes(self, df, table, snapshot):
+    def fail_on_nodes(self, df, table, snapshot, **kw):
         if table == "nodes":
             raise RuntimeError("simulated kill during rebuild")
-        return real_commit(self, df, table, snapshot)
+        return real_commit(self, df, table, snapshot, **kw)
 
     # force the rebuild path (threshold 0) and kill it before nodes
     monkeypatch.setattr(TableIO, "commit", fail_on_nodes)

@@ -15,22 +15,31 @@ from master_project_spark.tableio import TableIO
 
 
 def test_commit_invalidates_manifest_before_overwrite(spark, tmp_path):
-    io = TableIO(tmp_path)
-    io.commit(spark.range(5).withColumnRenamed("id", "x"), "t", "snap1")
-    assert io.is_committed("t", "snap1")
-
-    # a failing overwrite (kill analog) must leave the table UNcommitted
+    """Both commit modes: the whole-table overwrite, and the
+    partition-replacing mode the incremental append uses."""
     from pyspark.sql.functions import udf
 
     @udf("long")
     def boom(x):
         raise RuntimeError("killed mid-overwrite")
 
-    bad = spark.range(5).select(boom("id").alias("x"))
-    with pytest.raises(Exception):
-        io.commit(bad, "t", "snap1")
-    assert not io.is_committed("t", "snap1")
-    assert io.manifest("t") is None
+    for mode in ("full", "partitions"):
+        io = TableIO(tmp_path / mode)
+        kw = ({} if mode == "full"
+              else {"partition_by": ["batch"], "replace_partitions": ["b0"]})
+
+        def table(x):
+            df = spark.range(5).select(x.alias("x"))
+            return df if mode == "full" else df.withColumn("batch", F.lit("b0"))
+
+        io.commit(table(F.col("id")), "t", "snap1", **kw)
+        assert io.is_committed("t", "snap1"), mode
+
+        # a failing overwrite (kill analog) must leave the table UNcommitted
+        with pytest.raises(Exception):
+            io.commit(table(boom("id")), "t", "snap1", **kw)
+        assert not io.is_committed("t", "snap1"), mode
+        assert io.manifest("t") is None, mode
 
 
 def test_fingerprint_detects_even_duplicate_swap(spark):

@@ -3,8 +3,7 @@
 The oracle encoder (tests/vp8l_encoder.py) is written from the RFC 9649
 spec with its own bit writer, Huffman builder, and forward transforms —
 no tables or code shared with the decoder — so agreement pins both
-implementations to the spec, the same strategy the Annex-C JPEG encoder
-tests use for the JPEG decoder."""
+implementations to the spec."""
 import random
 import struct
 
@@ -189,56 +188,6 @@ def test_vp8l_combined_transforms_roundtrip():
                pred_bits=3, cache_bits=5, lz77_runs=True)
 
 
-def test_vp8l_seam_real_luma_and_fallbacks():
-    from master_project_spark.operators.multimodal import _decode_image
-
-    px = _image(15, 8, seed=14)
-    data = encode_vp8l(px, 15, 8)
-    w, h, luma = _decode_image(data)
-    exp = sum(0.299 * ((p >> 16) & 0xFF) + 0.587 * ((p >> 8) & 0xFF)
-              + 0.114 * (p & 0xFF) for p in px) / len(px) / 255.0
-    assert (w, h) == (15, 8)
-    assert luma == pytest.approx(exp, abs=1e-5)
-
-    # truncated VP8L body -> real dims from header, stand-in luma
-    cut = data[:30]
-    trunc = (data[:4] + struct.pack("<I", len(cut) - 8) + cut[8:])
-    w2, h2, luma2 = _decode_image(trunc)
-    assert (w2, h2) == (15, 8)
-    assert luma2 != pytest.approx(exp, abs=1e-5)
-
-    # over-fence header (2500x2500 > 4 Mpx): dims real, luma stand-in
-    bits = (2500 - 1) | ((2500 - 1) << 14)
-    big = (b"RIFF" + struct.pack("<I", 4 + 8 + 5) + b"WEBP"
-           + b"VP8L" + struct.pack("<I", 5) + b"\x2f"
-           + struct.pack("<I", bits))
-    w3, h3, _ = _decode_image(big + b"\x00")
-    assert (w3, h3) == (2500, 2500)
-
-    # lossy VP8 keyframe: dims real, luma stand-in (codec out of scope)
-    vp8 = (b"VP8 " + struct.pack("<I", 10)
-           + b"\x00\x00\x00\x9d\x01\x2a" + struct.pack("<HH", 99, 55))
-    lossy = b"RIFF" + struct.pack("<I", 4 + len(vp8)) + b"WEBP" + vp8
-    w4, h4, _ = _decode_image(lossy)
-    assert (w4, h4) == (99, 55)
-
-
-def test_vp8l_corrupt_never_raises():
-    from master_project_spark.operators.multimodal import _decode_image
-
-    px = _image(9, 9, seed=15)
-    data = encode_vp8l(px, 9, 9, cache_bits=4)
-    rng = random.Random(16)
-    for _ in range(50):                        # bit-flip fuzz
-        b = bytearray(data)
-        for _ in range(rng.randrange(1, 6)):
-            b[rng.randrange(20, len(b))] ^= 1 << rng.randrange(8)
-        w, h, luma = _decode_image(bytes(b))   # must never raise
-        assert 0.0 <= luma <= 1.0
-    for cut in (13, 21, 22, 40, len(data) - 1):
-        _decode_image(data[:cut])
-
-
 def test_vp8l_simple_and_degenerate_codes():
     """Single-color images force 0-bit (single-symbol) codes through the
     simple-code and the degenerate normal-code paths."""
@@ -248,35 +197,6 @@ def test_vp8l_simple_and_degenerate_codes():
     # two colors -> 2-symbol simple codes, incl. sym0 > sym1 read order
     px2 = [(0xFFAA0011 if (i * 7) % 3 else 0xFF550099) for i in range(36)]
     _roundtrip(px2, 6, 6)
-
-
-def test_vp8l_through_spark_image_stage(spark):
-    """image_features (mapInPandas) returns real dims + real mean luma
-    for lossless WebP payloads, stand-in luma for a lossy VP8 payload."""
-    from master_project_spark.operators.multimodal import image_features
-
-    rows = []
-    expected = {}
-    for i in range(5):
-        px = _image(12, 5, seed=40 + i)
-        rows.append((f"m{i}", "image",
-                     bytearray(encode_vp8l(px, 12, 5, cache_bits=4))))
-        expected[f"m{i}"] = sum(
-            0.299 * ((p >> 16) & 0xFF) + 0.587 * ((p >> 8) & 0xFF)
-            + 0.114 * (p & 0xFF) for p in px) / len(px) / 255.0
-    vp8 = (b"VP8 " + struct.pack("<I", 10)
-           + b"\x00\x00\x00\x9d\x01\x2a" + struct.pack("<HH", 31, 17))
-    rows.append(("lossy", "image",
-                 bytearray(b"RIFF" + struct.pack("<I", 4 + len(vp8))
-                           + b"WEBP" + vp8)))
-    df = spark.createDataFrame(
-        rows, "media_id string, kind string, content binary")
-    out = {r.media_id: r for r in image_features(df).collect()}
-    assert len(out) == 6
-    for mid, exp in expected.items():
-        assert (out[mid].width, out[mid].height) == (12, 5)
-        assert out[mid].mean_luma == pytest.approx(exp, abs=1e-5)
-    assert (out["lossy"].width, out["lossy"].height) == (31, 17)
 
 
 def test_vp8l_prefix_writer_decoder_agreement():
