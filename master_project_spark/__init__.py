@@ -6,7 +6,7 @@ distributed, transcript-scale Spark pipeline:
 
     transcripts -> normalize/split/chunk -> mention & triple extraction
                 -> alias linking (broadcast) -> canonicalization (MinHash-LSH
-                   + iterative connected components) -> nodes/edges tables
+                   + union-find connected components) -> nodes/edges tables
 
 Everything is DataFrame-first; custom text semantics live in the pure-Python
 shared core (`core.py`) used identically by the single-process oracle and the

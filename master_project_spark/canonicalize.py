@@ -1,9 +1,9 @@
-"""Entity canonicalization: MinHash-LSH blocking + iterative-join connected
+"""Entity canonicalization: MinHash-LSH blocking + union-find connected
 components (north_star: "canonicalization clusters surface forms via
 MinHash-LSH blocking plus GraphFrames/iterative-join connected components").
 
-GraphFrames is not a dependency — the iterative min-label propagation below
-is the dependency-free path (SURVEY.md §7 step 6):
+GraphFrames is not a dependency — the union-find below is the
+dependency-free path (SURVEY.md §7 step 6):
 
 - blocking avoids the O(n²) pair explosion: 16 MD5 MinHashes over char
   3-shingles, banded 2-per-band into 8 LSH buckets per surface; only
@@ -12,11 +12,12 @@ is the dependency-free path (SURVEY.md §7 step 6):
   deliberate, visible cap, not silent truncation (they are re-covered by the
   exact alias edges);
 - candidate pairs are verified by signature agreement >= ``min_agree`` of 16;
-- connected components run as driver-loop iterative joins with
-  ``localCheckpoint()`` per round (lineage truncation, SURVEY §2.11 C5) and
-  an ``exceptAll``-style changed-count == 0 termination probe (X2,
-  ent_extraction.py:360-361 analog);
-- label = lexicographic MIN, so the fixpoint is order- and
+- connected components: the verified pairs (one per near-duplicate key
+  pair, so vocabulary-sized, not data-sized) are collected once and merged
+  on the driver by a path-halving union-find, which has no diameter
+  limit; Spark then joins the (skey, root) table back and takes the min
+  label per root;
+- label = lexicographic MIN, so the result is order- and
   partitioning-independent (deterministic under any parallelism).
 
 Linked surfaces (alias-dict hits) seed their cluster with a "0"-prefixed
@@ -26,7 +27,8 @@ get "1" + canonical_key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .udfs import canonical_key_udf, minhash_udf
 
@@ -54,8 +56,10 @@ def lsh_candidate_pairs(vertices: DataFrame, max_bucket: int = 50,
                         min_agree: int = 8) -> tuple[DataFrame, int]:
     """Candidate skey pairs from LSH banding, verified by MinHash agreement.
     Returns (pairs, n_dropped_buckets)."""
+    # materialize once: the drop count and the pairs plan both read the
+    # signatures, and without this each re-runs the Python MinHash
     keys = vertices.select("skey").distinct().withColumn(
-        "sig", minhash_udf(F.col("skey")))
+        "sig", minhash_udf(F.col("skey"))).localCheckpoint(eager=True)
     bands = keys.select(
         "skey", "sig",
         F.posexplode(F.expr(
@@ -106,24 +110,39 @@ def ensure_checkpoint_dir(spark) -> str:
     return path
 
 
+def union_find_roots(pairs) -> dict[str, str]:
+    """Union-find over undirected (a, b) pairs: each key in some pair ->
+    the root of its component. Path halving, no diameter limit."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[rb] = ra
+    return {k: find(k) for k in parent}
+
+
 def connected_components(vertices: DataFrame, edges: DataFrame,
-                         max_iter: int = 50,
                          use_graphframes: bool | str = "auto") -> DataFrame:
-    """Iterative min-label propagation. vertices: (skey, init_label);
-    edges: (ka, kb) undirected. Returns (skey, entity_label).
+    """Connected components with a min-label per component. vertices:
+    (skey, init_label); edges: (ka, kb) undirected. Returns
+    (skey, entity_label), entity_label = the lexicographic MIN init_label
+    of the skey's component.
 
-    north_star names "GraphFrames/iterative-join connected components":
-    when the graphframes package is importable (use_graphframes='auto' or
-    True) the CC step delegates to GraphFrame.connectedComponents() and the
-    cluster label is still the lexicographic MIN init_label per component
-    (identical output either path); the dependency-free iterative join is
-    the default sandbox path.
-
-    Convergence requires iterations >= cluster diameter; non-convergence
-    within max_iter (a >50-hop near-dup chain) is loudly warned rather than
-    silently emitting split clusters."""
-    import warnings
-
+    When the graphframes package is importable (use_graphframes='auto' or
+    True) the CC step delegates to GraphFrame.connectedComponents()
+    (identical output either path). The dependency-free default collects
+    the edges to the driver once and merges them with ``union_find_roots``:
+    the edges are verified LSH pairs, a list the size of the near-duplicate
+    vocabulary, not of the data."""
     if use_graphframes is True or (use_graphframes == "auto"
                                    and graphframes_available()):
         from graphframes import GraphFrame
@@ -143,60 +162,38 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                   .select(F.col("id").alias("skey"), "label"))
         return labels.withColumnRenamed("label", "entity_label")
 
-    sym = edges.union(edges.select(F.col("kb").alias("ka"),
-                                   F.col("ka").alias("kb")))
-    sym = sym.localCheckpoint(eager=True)
-    converged = False
-    labels = (vertices.groupBy("skey")
-              .agg(F.min("init_label").alias("label"))
-              .localCheckpoint(eager=True))
-    def propagate(lbls: DataFrame) -> DataFrame:
-        msgs = (sym.join(lbls, sym.ka == lbls.skey)
-                .select(F.col("kb").alias("skey"), "label"))
-        return (lbls.select("skey", "label").union(msgs)
-                .groupBy("skey").agg(F.min("label").alias("label")))
-
-    for _ in range(0, max_iter, 3):
-        # THREE propagation steps per convergence probe (round-3: was 2):
-        # the probe is a driver-synchronized action — the serial component
-        # of the whole pipeline at high core counts — and propagation past
-        # the fixpoint is a cheap no-op, so widening the stride trades a
-        # little redundant map work for a third fewer driver round-trips.
-        # (Stride >3 showed no further gain: typical surface-cluster
-        # diameters converge in <=4 steps, so wider strides only add
-        # no-op joins.)
-        # lazy checkpoint: the changed-count below is the single action
-        # that both materializes the truncated lineage and tests
-        # convergence
-        new_labels = propagate(propagate(propagate(labels))) \
-            .localCheckpoint(eager=False)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "skey")
-                   .filter(F.col("n.label") != F.col("o.label"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components did not converge within {max_iter} "
-            "iterations — some clusters may be split", RuntimeWarning,
-            stacklevel=2)
-    return labels.withColumnRenamed("label", "entity_label")
+    roots = union_find_roots(
+        (r["ka"], r["kb"]) for r in edges.select("ka", "kb").collect())
+    # an Arrow table is read by the JVM alone; a list of tuples would
+    # become a Python RDD that runs Python tasks in every job reading it
+    root_of = vertices.sparkSession.createDataFrame(pa.table(
+        {"skey": list(roots), "root": list(roots.values())},
+        pa.schema([("skey", pa.string()), ("root", pa.string())])))
+    # keys in no pair are their own root, so they keep their own label
+    return (vertices.groupBy("skey")
+            .agg(F.min("init_label").alias("label"))
+            .join(root_of, "skey", "left")
+            .select("skey", F.min("label").over(Window.partitionBy(
+                F.coalesce("root", "skey"))).alias("entity_label")))
 
 
 def build_entity_map(surfaces: DataFrame, alias_dict: DataFrame,
-                     max_bucket: int = 50, min_agree: int = 8) -> tuple[DataFrame, int]:
+                     max_bucket: int = 50,
+                     min_agree: int = 8) -> tuple[DataFrame, dict]:
     """surface -> entity_id. entity_id is 'ent_*' (dictionary canonical) when
     the cluster contains a linked surface, else 'surf_<min canonical_key>'.
-    Deterministic under any partitioning/parallelism."""
+    Deterministic under any partitioning/parallelism. Returns
+    (entity_map, stats): the counts of dropped oversized LSH buckets and
+    of verified pairs, {lsh_buckets_dropped, lsh_pairs}."""
     # materialize once: the distinct-surface shuffle feeds the LSH count,
     # the CC seed, and the final map — without this it recomputes per action
     vertices = surface_vertices(surfaces, alias_dict) \
         .localCheckpoint(eager=True)
     pairs, n_dropped = lsh_candidate_pairs(
         vertices, max_bucket=max_bucket, min_agree=min_agree)
+    # materialize once: counted here, collected by the union-find
+    pairs = pairs.localCheckpoint(eager=True)
+    stats = {"lsh_buckets_dropped": n_dropped, "lsh_pairs": pairs.count()}
     labels = connected_components(
         vertices.select("skey", "init_label"), pairs)
     entity_map = (
@@ -210,4 +207,4 @@ def build_entity_map(surfaces: DataFrame, alias_dict: DataFrame,
                                 F.expr("substring(entity_label, 2)")))
             .alias("entity_id"))
     )
-    return entity_map, n_dropped
+    return entity_map, stats

@@ -831,9 +831,10 @@ _CC_ITERS = 8
 
 
 def _cc_sql() -> str:
-    """Min-label propagation unrolled (the canonicalization CC loop's
-    algorithm, canonicalize.py, as a SQL-checkable query; fixed iterations
-    >= graph diameter at test scale => exact equality either way)."""
+    """Min-label propagation unrolled (connected components with the
+    min-label rule canonicalize.py applies, as a SQL-checkable query; fixed
+    iterations >= graph diameter at test scale => exact equality either
+    way)."""
     ctes = [
         f"ew AS (SELECT subj, pred, obj, count(*) AS w FROM "
         f"({_pattern_union_sql()}) GROUP BY 1, 2, 3 HAVING count(*) >= 3)",

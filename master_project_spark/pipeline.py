@@ -15,7 +15,7 @@ Stage plan (new-engine lifecycle, SURVEY.md §3):
                    across opaque UDFs (SURVEY §4)
     -> [link]      mentions x broadcast(alias_dict) (J6 — broadcast hash
                    join, no shuffle on the skewed surface side)
-    -> [canon]     MinHash-LSH blocking + iterative-join connected components
+    -> [canon]     MinHash-LSH blocking + union-find connected components
     -> [graph]     nodes + edges tables
     -> [metrics]   run_metrics: per-stage wall/rows + per-file lineage
 
@@ -534,15 +534,16 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     verify_udf = verify_udf_for(spark, alias_dict)
 
     # canonicalization (LSH + CC) also only needs the extraction output;
-    # its driver-loop convergence probes are latency-bound and overlap
-    # perfectly with the Arrow verification/linking stages
-    canon_info = {"n_dropped_buckets": 0}
+    # its small driver-synchronized actions (signature and pair
+    # checkpoints, the pair collect for the union-find) overlap with the
+    # Arrow verification/linking stages
+    canon_stats = {"lsh_buckets_dropped": 0, "lsh_pairs": 0}
 
     def _entity_map():
-        em, n_dropped = build_entity_map(
+        em, stats = build_entity_map(
             surfaces_df(triples_df(extracted), mentions_df(extracted)),
             alias_dict)
-        canon_info["n_dropped_buckets"] = n_dropped
+        canon_stats.update(stats)
         return em.withColumn("batch", F.lit(batch_token))
 
     wave2 = [
@@ -673,7 +674,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         "run_id": run_id, "stage": "_order_check",
         "snapshot_id": "", "skipped": False,
         "rows_out": order_violations, "n_files": 0, "wall_ms": 0.0,
-        "files_json": json.dumps({"lsh_buckets_dropped": canon_info["n_dropped_buckets"]}),
+        "files_json": json.dumps(canon_stats),
     })
     if fixpoint_info:
         st.metrics.append({

@@ -153,8 +153,11 @@ def _silence_python_accumulator_noise(spark: SparkSession) -> None:
     pyspark never clears the module-global registry, so a stopped
     session's accumulators linger), the filter is NOT installed — the
     noise returns rather than risk concealing real accumulator-update
-    loss. Any failure to install (logging backend swapped) also leaves
-    logging untouched."""
+    loss. That registry check runs only here, at install time: a Python
+    accumulator registered LATER in the same context (library code that
+    calls get_spark and then creates one) finds the filter already on the
+    root logger, so its update-loss errors are silenced too. Any failure to
+    install (logging backend swapped) also leaves logging untouched."""
     try:
         sc = spark.sparkContext
         if sc.applicationId in _LOG_FILTERED:

@@ -18,15 +18,27 @@ def test_iceberg_detection_and_explicit_error(spark):
 
 
 def test_cc_iterative_fallback_matches_forced_off(spark):
-    """use_graphframes='auto' without the package == iterative path."""
-    v = spark.createDataFrame(
-        [("a", "1a"), ("b", "1b"), ("c", "1c"), ("d", "1d")],
-        "skey string, init_label string")
-    e = spark.createDataFrame([("a", "b"), ("b", "c")], "ka string, kb string")
-    got = {(r["skey"], r["entity_label"])
-           for r in connected_components(v, e, use_graphframes="auto").collect()}
-    want = {("a", "1a"), ("b", "1a"), ("c", "1a"), ("d", "1d")}
-    assert got == want
+    """use_graphframes='auto' without the package == the union-find path:
+    a small graph with an isolated key, and a 70-key chain — longer than
+    any fixed number of label-propagation rounds — that must come back as
+    ONE component, without a warning."""
+    import warnings
+
+    chain = [f"k{i:03d}" for i in range(70)]
+    cases = [
+        (["a", "b", "c", "d"], [("a", "b"), ("b", "c")],
+         {"a": "1a", "b": "1a", "c": "1a", "d": "1d"}),
+        (chain, list(zip(chain, chain[1:])), {k: "1k000" for k in chain}),
+    ]
+    for keys, edges, want in cases:
+        v = spark.createDataFrame([(k, "1" + k) for k in keys],
+                                  "skey string, init_label string")
+        e = spark.createDataFrame(edges, "ka string, kb string")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            got = {r["skey"]: r["entity_label"] for r in connected_components(
+                v, e, use_graphframes="auto").collect()}
+        assert got == want
 
 
 class _FakeIcebergCatalog:

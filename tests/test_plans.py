@@ -5,6 +5,7 @@ silently de-optimizes a plan fails CI."""
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,12 +64,38 @@ def test_whole_stage_codegen_on_text_ops(spark):
     BatchEvalPython/ArrowEvalPython in the plan. The scan-spread exchange
     (r6, entry_queries._tp) wraps the query in AdaptiveSparkPlan, which
     hides codegen markers until execution — so execute first and assert on
-    the FINAL adaptive plan."""
+    the FINAL adaptive plan. The codegen marker must sit on the node that
+    evaluates the regexp_extract_all projection itself: another stage (the
+    scan below the exchange) being codegen'd proves nothing about the text
+    ops."""
     df = EQ.token_stats(spark, SF_DIR)
     df.collect()
     p = plan(df, mode="simple")
-    assert "*(" in p  # whole-stage-codegen marker (final AQE plan)
+    final = p.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    text_ops = [line for line in final.splitlines()
+                if "regexp_extract_all" in line]
+    assert text_ops
+    for line in text_ops:
+        # "+- *(2) Project [...]": whole-stage-codegen stage id on the node
+        assert re.match(r"[\s+:-]*\*\(\d+\) Project \[", line), line
     assert "EvalPython" not in p
+
+
+def test_lsh_pairs_plan_reads_checkpointed_signatures(spark):
+    """MinHash runs once per key: the LSH pairs plan reads the checkpointed
+    (skey, sig) table, with no Python evaluation node left to re-run the
+    signature UDF."""
+    from master_project_spark.canonicalize import (lsh_candidate_pairs,
+                                                   surface_vertices)
+    from master_project_spark.datagen import alias_df
+    surfaces = spark.createDataFrame(
+        [("SQuAD",), ("SQuAD 2.0",), ("ImageNet",)], "surface string")
+    pairs, _ = lsh_candidate_pairs(surface_vertices(surfaces,
+                                                    alias_df(spark)))
+    p = plan(pairs, mode="extended")
+    assert "EvalPython" not in p
+    assert "ExistingRDD" in p
 
 
 def test_pipeline_link_stage_broadcasts(spark):

@@ -83,3 +83,42 @@ def test_guarded_normalize_equals_unguarded(text):
         assert core.extract_turn(text) == ge
     finally:
         core._GUARDS_ENABLED = True
+
+
+def _bfs_components(pairs) -> set[frozenset]:
+    """Reference: components of an undirected edge list by breadth-first
+    search over an adjacency map."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    seen, comps = set(), set()
+    for start in adj:
+        if start in seen:
+            continue
+        comp, frontier = {start}, [start]
+        while frontier:
+            nxt = [n for x in frontier for n in adj[x] if n not in comp]
+            comp.update(nxt)
+            frontier = nxt
+        seen |= comp
+        comps.add(frozenset(comp))
+    return comps
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 40), st.integers(0, 40)),
+                max_size=80))
+def test_union_find_components_equal_bfs(edges):
+    """The driver-side union-find behind canonicalize.connected_components
+    groups keys exactly as a BFS does, over random edge lists (self-loops,
+    duplicates and long chains included)."""
+    from master_project_spark.canonicalize import union_find_roots
+
+    pairs = [(f"k{a}", f"k{b}") for a, b in edges]
+    roots = union_find_roots(pairs)
+    by_root: dict = {}
+    for k, r in roots.items():
+        by_root.setdefault(r, set()).add(k)
+    assert {frozenset(c) for c in by_root.values()} == _bfs_components(pairs)
+    assert all(roots[r] == r for r in roots.values())
