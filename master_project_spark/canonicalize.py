@@ -56,20 +56,23 @@ def lsh_candidate_pairs(vertices: DataFrame, max_bucket: int = 50,
                         min_agree: int = 8) -> tuple[DataFrame, int]:
     """Candidate skey pairs from LSH banding, verified by MinHash agreement.
     Returns (pairs, n_dropped_buckets)."""
-    # materialize once: the drop count and the pairs plan both read the
-    # signatures, and without this each re-runs the Python MinHash
     keys = vertices.select("skey").distinct().withColumn(
-        "sig", minhash_udf(F.col("skey"))).localCheckpoint(eager=True)
+        "sig", minhash_udf(F.col("skey")))
+    # materialize once, with each row's bucket size: the drop count and
+    # both sides of the self-join read this checkpoint, so neither MinHash
+    # nor the band explode and bucket count run again
     bands = keys.select(
         "skey", "sig",
         F.posexplode(F.expr(
             f"transform(sequence(0, {NUM_HASHES // BAND_SIZE - 1}), "
             f"b -> hash(sig[b*{BAND_SIZE}], sig[b*{BAND_SIZE}+1], b))"
-        )).alias("band_idx", "band_hash"))
-    sizes = bands.groupBy("band_idx", "band_hash").count()
-    n_dropped = sizes.filter(F.col("count") > max_bucket).count()
-    ok_buckets = sizes.filter(F.col("count") <= max_bucket).drop("count")
-    b = bands.join(ok_buckets, ["band_idx", "band_hash"])
+        )).alias("band_idx", "band_hash")
+    ).withColumn("n", F.count(F.lit(1)).over(
+        Window.partitionBy("band_idx", "band_hash"))
+    ).localCheckpoint(eager=True)
+    n_dropped = (bands.filter(F.col("n") > max_bucket)
+                 .select("band_idx", "band_hash").distinct().count())
+    b = bands.filter(F.col("n") <= max_bucket)
     a1 = b.select(F.col("skey").alias("ka"), F.col("sig").alias("siga"),
                   "band_idx", "band_hash")
     a2 = b.select(F.col("skey").alias("kb"), F.col("sig").alias("sigb"),
@@ -131,7 +134,8 @@ def union_find_roots(pairs) -> dict[str, str]:
 
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
-                         use_graphframes: bool | str = "auto") -> DataFrame:
+                         use_graphframes: bool | str = "auto",
+                         stats: dict | None = None) -> DataFrame:
     """Connected components with a min-label per component. vertices:
     (skey, init_label); edges: (ka, kb) undirected. Returns
     (skey, entity_label), entity_label = the lexicographic MIN init_label
@@ -142,7 +146,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     (identical output either path). The dependency-free default collects
     the edges to the driver once and merges them with ``union_find_roots``:
     the edges are verified LSH pairs, a list the size of the near-duplicate
-    vocabulary, not of the data."""
+    vocabulary, not of the data. ``stats``, when given, receives the
+    number of edges as ``lsh_pairs``."""
     if use_graphframes is True or (use_graphframes == "auto"
                                    and graphframes_available()):
         from graphframes import GraphFrame
@@ -155,6 +160,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         # pass). Provision one on demand, rooted in spark.local.dir so it
         # lands on the fast local disk, not the warehouse.
         ensure_checkpoint_dir(vertices.sparkSession)
+        if stats is not None:
+            stats["lsh_pairs"] = edges.count()
         cc = g.connectedComponents()
         labels = (cc.groupBy("component")
                   .agg(F.min("init_label").alias("label"))
@@ -162,8 +169,10 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                   .select(F.col("id").alias("skey"), "label"))
         return labels.withColumnRenamed("label", "entity_label")
 
-    roots = union_find_roots(
-        (r["ka"], r["kb"]) for r in edges.select("ka", "kb").collect())
+    pairs = edges.select("ka", "kb").collect()
+    if stats is not None:
+        stats["lsh_pairs"] = len(pairs)
+    roots = union_find_roots(pairs)
     # an Arrow table is read by the JVM alone; a list of tuples would
     # become a Python RDD that runs Python tasks in every job reading it
     root_of = vertices.sparkSession.createDataFrame(pa.table(
@@ -191,11 +200,9 @@ def build_entity_map(surfaces: DataFrame, alias_dict: DataFrame,
         .localCheckpoint(eager=True)
     pairs, n_dropped = lsh_candidate_pairs(
         vertices, max_bucket=max_bucket, min_agree=min_agree)
-    # materialize once: counted here, collected by the union-find
-    pairs = pairs.localCheckpoint(eager=True)
-    stats = {"lsh_buckets_dropped": n_dropped, "lsh_pairs": pairs.count()}
+    stats = {"lsh_buckets_dropped": n_dropped}
     labels = connected_components(
-        vertices.select("skey", "init_label"), pairs)
+        vertices.select("skey", "init_label"), pairs, stats=stats)
     entity_map = (
         vertices.select("surface", "skey")
         .join(labels, "skey")

@@ -213,4 +213,12 @@ def transcripts_df(spark, n_convs: int = 100, max_turns: int = 40,
 
 
 def alias_df(spark, seed: int = 42):
-    return spark.createDataFrame(gen_alias_dict(seed), alias_spark_schema())
+    """The alias dictionary as a Spark table built from Arrow: the JVM
+    reads it alone (a list of tuples would become a Python RDD, and every
+    job reading the dictionary would run Python tasks)."""
+    import pyarrow as pa
+
+    schema = pa.schema([("alias", pa.string()), ("canonical_id", pa.string()),
+                        ("prior", pa.float64())])
+    return spark.createDataFrame(
+        pa.Table.from_pylist(gen_alias_dict(seed), schema=schema))

@@ -21,7 +21,8 @@ Stage plan (new-engine lifecycle, SURVEY.md §3):
 
 Every stage commits via TableIO (parquet + manifest snapshot); a rerun with
 the same input fingerprint skips committed stages (resume-from-checkpoint,
-north rule).
+north rule). Each stage starts, on its own driver thread, once the stages
+it reads have committed or skip-resumed; a skipped stage runs no Spark job.
 """
 
 from __future__ import annotations
@@ -30,8 +31,11 @@ import hashlib
 import json
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import core
 from .canonicalize import build_entity_map
@@ -315,17 +319,27 @@ def edges_df(triples: DataFrame, entity_map: DataFrame) -> DataFrame:
     )
 
 
+#: the run_metrics table, one row per stage and run
+RUN_METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("stage", pa.string()),
+    ("snapshot_id", pa.string()), ("skipped", pa.bool_()),
+    ("rows_out", pa.int64()), ("n_files", pa.int32()),
+    ("wall_ms", pa.float64()), ("files_json", pa.string())])
+
+
+def run_metrics_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """The rows as a Spark table built from Arrow, which the JVM reads
+    alone: no Python RDD, so no Python tasks."""
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=RUN_METRICS_SCHEMA))
+
+
 def append_run_metrics(spark: SparkSession, out_dir: str,
                        rows: list[dict]) -> None:
     """Append rows to the run_metrics table (plain parquet append: a log,
     not a snapshot-committed stage)."""
-    spark.createDataFrame(
-        [(m["run_id"], m["stage"], m["snapshot_id"], bool(m["skipped"]),
-          int(m["rows_out"]), int(m["n_files"]), float(m["wall_ms"]),
-          m["files_json"]) for m in rows],
-        "run_id string, stage string, snapshot_id string, skipped boolean, "
-        "rows_out long, n_files int, wall_ms double, files_json string",
-    ).write.mode("append").parquet(f"{out_dir}/run_metrics")
+    run_metrics_df(spark, rows).write.mode("append") \
+        .parquet(f"{out_dir}/run_metrics")
 
 
 @dataclass
@@ -365,30 +379,36 @@ class _StageRunner:
         self.resume, self.run_id = resume, run_id
         self.metrics: list[dict] = []
 
-    def run_group(self, jobs: list[tuple]) -> dict[str, DataFrame]:
-        """Commit INDEPENDENT stages concurrently (C1 fan-out at stage
-        granularity): each job is (name, compute, kwargs). Spark's
-        scheduler interleaves the concurrent jobs' tasks (FAIR mode,
-        session.py), so one stage's slot-idle gaps — Python-worker spinup,
-        shuffle barriers, single-threaded write tails — are filled by
-        another's tasks instead of serializing ~2-3 s of latency per
-        stage. Resume semantics are unchanged: every stage still checks /
-        writes its own manifest."""
-        from concurrent.futures import ThreadPoolExecutor
+    def run_stages(self, stages: list[tuple]) -> dict[str, DataFrame]:
+        """Commit each stage, on its own thread, as soon as its inputs are
+        committed or skip-resumed. A stage is ``(name, inputs, compute,
+        kwargs)``: ``compute`` gets the tables named in ``inputs`` by name;
+        ``kwargs`` go to ``run``. FAIR scheduling (session.py) fills one
+        stage's slot-idle gaps with another's tasks. After a failure no
+        further stage starts, and the first error is raised."""
+        from concurrent.futures import (FIRST_COMPLETED, ThreadPoolExecutor,
+                                        wait)
 
-        if len(jobs) == 1:
-            name, compute, kw = jobs[0]
-            return {name: self.run(name, compute, **kw)}
-        # NOTE (r6): one-scheduler-pool-per-stage (root FAIR is fair ACROSS
-        # pools; the shared default pool is FIFO internally) was A/B'd in 3
-        # interleaved pairs and did NOT beat the shared pool (medians 32.3 s
-        # vs 28.1 s with one weather-outlier pair the other way) — the
-        # default pool's FIFO still backfills idle slots well enough at
-        # this stage mix, so the simpler form stays (OPTIMIZATION_r06.md).
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            futs = {name: ex.submit(self.run, name, compute, **kw)
-                    for name, compute, kw in jobs}
-            return {name: f.result() for name, f in futs.items()}
+        # one scheduler pool per stage did not beat the shared default
+        # pool in 3 interleaved A/B pairs (r6, OPTIMIZATION_r06.md)
+        done: dict[str, DataFrame] = {}
+        waiting, running = list(stages), {}
+        with ThreadPoolExecutor(max_workers=len(stages)) as ex:
+            while waiting or running:
+                for spec in [s for s in waiting
+                             if all(i in done for i in s[1])]:
+                    waiting.remove(spec)
+                    name, inputs, compute, kw = spec
+                    tables = {i: done[i] for i in inputs}
+                    running[ex.submit(self.run, name,
+                                      partial(compute, tables), **kw)] = name
+                if not running:
+                    raise ValueError("stages with inputs that no stage "
+                                     f"commits: {[s[0] for s in waiting]}")
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in finished:
+                    done[running.pop(f)] = f.result()
+        return done
 
     def snapshot_id(self, name: str, extra: str = "") -> str:
         return hashlib.sha256(
@@ -490,99 +510,77 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # conversations — O(delta + touched partitions), never O(history)
     batch_token = "b" + hashlib.sha256(fp.encode()).hexdigest()[:12]
 
-    # ---- wave 1: the three transcripts-rooted stages run CONCURRENTLY —
-    # extraction (Python-heavy), chunking (shuffle+Python), and the salted
-    # stats agg interleave under the FAIR scheduler, filling each other's
-    # slot-idle gaps (the measured serial fraction was the 4->16 scaling
-    # bottleneck, BENCH/BASELINE.md)
-    wave1 = [
-        ("extracted",
-         lambda: extracted_df(turns).withColumn("batch", F.lit(batch_token)),
-         {"partition_by": ["batch"]}),
-        ("conv_stats",
-         lambda: conv_stats_df(transcripts)
-         .withColumn("batch", F.lit(batch_token)),
-         {"partition_by": ["batch"]}),
+    def batched(df: DataFrame) -> DataFrame:
+        return df.withColumn("batch", F.lit(batch_token))
+
+    # canonicalization (LSH + union-find) reads only the extraction; its
+    # small driver-synchronized actions (the signature checkpoint, the pair
+    # collect for the union-find) overlap with the other stages' tasks
+    canon_stats = {"lsh_buckets_dropped": 0, "lsh_pairs": 0}
+
+    def _entity_map(t):
+        em, stats = build_entity_map(
+            surfaces_df(triples_df(t["extracted"]),
+                        mentions_df(t["extracted"])), alias_dict)
+        canon_stats.update(stats)
+        return batched(em)
+
+    def _verified_triples(t):
+        # the alias vocabulary is collected and broadcast only when this
+        # stage recomputes, never on a resume that skips it
+        return verified_triples_df(triples_df(t["extracted"]),
+                                   verify_udf_for(spark, alias_dict))
+
+    # ---- the stages, (name, inputs, compute, kwargs): each starts as soon
+    # as the stages it reads have committed or skip-resumed. The three
+    # transcripts-rooted stages start at once — extraction (Python-heavy),
+    # chunking (shuffle + Python) and the salted stats aggregation fill
+    # each other's slot-idle gaps under FAIR. Every extraction consumer
+    # reads a filter of the committed `extracted` table, row-identical to
+    # the committed triples/mentions, so none waits for those commits, nor
+    # for chunks or conv_stats. processed_convs is the conversation ledger
+    # that seeds incremental appends; its n_turns lets an append DETECT
+    # conversations that grew after processing.
+    part = {"partition_by": ["batch"]}
+    alias_part = {"extra": alias_fp, "partition_by": ["batch"]}
+    stages = [
+        ("extracted", [], lambda t: batched(extracted_df(turns)), part),
+        ("conv_stats", [], lambda t: batched(conv_stats_df(transcripts)),
+         part),
+        ("entity_map", ["extracted"], _entity_map, alias_part),
+        ("triples", ["extracted"], lambda t: triples_df(t["extracted"]),
+         part),
+        ("mentions", ["extracted"], lambda t: mentions_df(t["extracted"]),
+         part),
+        ("processed_convs", ["conv_stats"],
+         lambda t: t["conv_stats"].select("conv_id", "n_turns", "batch"),
+         part),
+        ("verified_triples", ["extracted"], _verified_triples, alias_part),
+        ("linked_mentions", ["extracted"],
+         lambda t: linked_mentions_df(mentions_df(t["extracted"]),
+                                      alias_dict), alias_part),
+        ("nodes", ["linked_mentions", "entity_map"],
+         lambda t: nodes_df(t["linked_mentions"].drop("batch"),
+                            t["entity_map"].drop("batch")),
+         {"extra": alias_fp}),
+        ("edges", ["triples", "entity_map"],
+         lambda t: edges_df(t["triples"].drop("batch"),
+                            t["entity_map"].drop("batch")),
+         {"extra": alias_fp}),
     ]
     if with_chunks:
         # ordering enforced JVM-side (sort_array(collect_list(...)), W2);
         # ONE vectorized pandas UDF chunks many conversations per Arrow
         # batch (W1); mega-conversations stream segmented (bounded rows)
-        wave1.append((
-            "chunks",
-            lambda: chunk_stage_df(transcripts,
-                                   input_clustered=input_clustered)
-            .withColumn("batch", F.lit(batch_token)),
-            {"partition_by": ["batch"]}))
-    w1 = st.run_group(wave1)
-    extracted = w1["extracted"]
-    tables_conv_stats = w1["conv_stats"]
-
-    # ---- wave 2: projections of wave-1 outputs (all independent).
-    # processed_convs = the conversation ledger seeding incremental
-    # appends; n_turns lets it DETECT conversations that grew after
-    # processing (re-extracted, not silently dropped).
-    #
-    # triples/mentions are projections of the committed extraction, shared
-    # by the commit stages AND the wave-2 consumers below (r6: verification
-    # / linking / canonicalization used to wait for the triples/mentions
-    # COMMITS and then re-read them — but a filter of the committed
-    # `extracted` table is row-identical to reading the committed filter
-    # output, so all seven stages are independent and run as ONE
-    # concurrent wave, removing a full wave of commit latency from the
-    # critical path)
-    verify_udf = verify_udf_for(spark, alias_dict)
-
-    # canonicalization (LSH + CC) also only needs the extraction output;
-    # its small driver-synchronized actions (signature and pair
-    # checkpoints, the pair collect for the union-find) overlap with the
-    # Arrow verification/linking stages
-    canon_stats = {"lsh_buckets_dropped": 0, "lsh_pairs": 0}
-
-    def _entity_map():
-        em, stats = build_entity_map(
-            surfaces_df(triples_df(extracted), mentions_df(extracted)),
-            alias_dict)
-        canon_stats.update(stats)
-        return em.withColumn("batch", F.lit(batch_token))
-
-    wave2 = [
-        ("triples", lambda: triples_df(extracted),
-         {"partition_by": ["batch"]}),
-        ("mentions", lambda: mentions_df(extracted),
-         {"partition_by": ["batch"]}),
-        ("processed_convs",
-         lambda: tables_conv_stats.select("conv_id", "n_turns", "batch"),
-         {"partition_by": ["batch"]}),
-        ("verified_triples",
-         lambda: verified_triples_df(triples_df(extracted), verify_udf),
-         {"extra": alias_fp, "partition_by": ["batch"]}),
-        ("linked_mentions",
-         lambda: linked_mentions_df(mentions_df(extracted), alias_dict),
-         {"extra": alias_fp, "partition_by": ["batch"]}),
-        ("entity_map", _entity_map,
-         {"extra": alias_fp, "partition_by": ["batch"]}),
-    ]
-    if with_chunks:
-        chunks_b = w1["chunks"]
-        wave2.append((
-            "corpus",
-            lambda: corpus_df(chunks_b),
-            {"partition_by": ["batch"]}))
-    w2 = st.run_group(wave2)
-    triples = w2["triples"].drop("batch")
-    mentions = w2["mentions"].drop("batch")
-
-    tables = {"triples": triples, "mentions": mentions,
-              "conv_stats": tables_conv_stats.drop("batch")}
-    if with_chunks:
-        tables["chunks"] = w1["chunks"].drop("batch")
-        tables["corpus"] = w2["corpus"].drop("batch")
-    tables["verified_triples"] = w2["verified_triples"].drop("batch")
-    linked = w2["linked_mentions"].drop("batch")
-    tables["linked_mentions"] = linked
-    entity_map = w2["entity_map"].drop("batch")
-    tables["entity_map"] = entity_map
+        stages += [
+            ("chunks", [],
+             lambda t: batched(chunk_stage_df(
+                 transcripts, input_clustered=input_clustered)), part),
+            ("corpus", ["chunks"], lambda t: corpus_df(t["chunks"]), part),
+        ]
+    tables = {name: df.drop("batch")
+              for name, df in st.run_stages(stages).items()
+              if name not in ("extracted", "processed_convs")}
 
     # ---- extraction fixpoint (VERDICT gap #1): the reference's core
     # algorithm — retrieval-gated extract + verify + keyword growth to
@@ -624,14 +622,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
             tables["chunk_embeddings"] = st.run(
                 "chunk_embeddings", lambda: embed_cache.df, extra=alias_fp)
 
-    # ---- graph materialization
-    w5 = st.run_group([
-        ("nodes", lambda: nodes_df(linked, entity_map), {"extra": alias_fp}),
-        ("edges", lambda: edges_df(triples, entity_map), {"extra": alias_fp}),
-    ])
-    tables["nodes"] = w5["nodes"]
-    tables["edges"] = w5["edges"]
-
     # ---- ordering invariant check (north_star's
     # Window.partitionBy(conv_id).orderBy(turn_idx) contract): a
     # projection of the COMMITTED conv_stats output — one row per
@@ -639,9 +629,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     # its own full scan, first serial at run end, then overlapped — both
     # cost a whole extra read of the corpus; riding the salted
     # aggregation costs three tiny columns)
-    if "nd_turn_idx" in tables_conv_stats.columns:
+    if "nd_turn_idx" in tables["conv_stats"].columns:
         order_violations = (
-            tables_conv_stats
+            tables["conv_stats"]
             .filter((F.col("n_turns") != F.col("nd_turn_idx"))
                     | (F.col("max_turn_idx") - F.col("min_turn_idx") + 1
                        != F.col("n_turns"))).count())
@@ -685,7 +675,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, out_dir: str,
             "files_json": json.dumps(fixpoint_info),
         })
     append_run_metrics(spark, out_dir, st.metrics)
-    tables["run_metrics"] = spark.read.parquet(f"{out_dir}/run_metrics")
+    tables["run_metrics"] = spark.read.schema(
+        from_arrow_schema(RUN_METRICS_SCHEMA)).parquet(
+        f"{out_dir}/run_metrics")
 
     return PipelineResult(run_id=run_id, out_dir=out_dir, tables=tables,
                           metrics=st.metrics)

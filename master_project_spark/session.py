@@ -54,9 +54,9 @@ def get_spark(cores: int | None = None, app_name: str = "master_project_spark",
         .config("spark.driver.memory", driver_mem)
         .config("spark.local.dir", local_dir or "/tmp")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # FAIR: the pipeline commits independent stages from concurrent
-        # driver threads (pipeline._StageRunner.run_group); FIFO would let
-        # one stage's wave of tasks starve the others instead of filling
+        # FAIR: the pipeline commits each stage from its own driver thread
+        # once its inputs commit (pipeline._StageRunner.run_stages); FIFO
+        # would let one stage's tasks starve the others instead of filling
         # their slot-idle gaps
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.enabled", "true")

@@ -25,7 +25,7 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -192,19 +192,15 @@ class TableIO:
         return manifest
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        try:
-            return spark.read.parquet(str(self._data_dir(name)))
-        except Exception:
-            # a PARTITIONED write of an empty DataFrame creates no data
-            # files at all (only _SUCCESS) — schema inference fails; the
-            # manifest recorded the schema at commit time, so an empty
-            # committed table is still readable
-            from pyspark.sql import types as T
-            m = self.manifest(name)
-            if m and m.get("schema"):
-                return spark.createDataFrame(
-                    [], T.StructType.fromJson(m["schema"]))
-            raise
+        """Open a table with the schema its manifest recorded at commit
+        time: no footer-inference job runs, and an empty partitioned commit
+        (no data files at all, only ``_SUCCESS``) reads as an empty table.
+        A table without a recorded schema falls back to inference."""
+        m = self.manifest(name)
+        reader = spark.read
+        if m and m.get("schema"):
+            reader = reader.schema(T.StructType.fromJson(m["schema"]))
+        return reader.parquet(str(self._data_dir(name)))
 
     def manifest(self, name: str) -> dict | None:
         mp = self._manifest_path(name)

@@ -17,10 +17,29 @@ from master_project_spark.pipeline import run_pipeline
 
 N_CONVS, MAX_TURNS = 60, 25
 
+#: one conversation naming a dictionary alias pair (SQuAD and its long
+#: form) and a near-duplicate pair only LSH can merge: "Penn Treebank" and
+#: "Penn Treebank V2" have different canonical keys
+ALIAS_TEXTS = [
+    "We trained on SQuAD using the default hyperparameters everywhere.",
+    "Our model was trained on Stanford Question Answering Dataset using "
+    "the default hyperparameters everywhere.",
+    "Our model was trained on Penn Treebank using the default "
+    "hyperparameters everywhere.",
+    "Our model was trained on Penn Treebank V2 using the default "
+    "hyperparameters everywhere.",
+]
+
 
 @pytest.fixture(scope="module")
 def rows():
-    return gen_transcripts(N_CONVS, MAX_TURNS, seed=42)
+    from datetime import datetime, timezone
+
+    ts = datetime(2025, 1, 1, tzinfo=timezone.utc)
+    return gen_transcripts(N_CONVS, MAX_TURNS, seed=42) + [
+        {"conv_id": "conv_aliases", "turn_idx": i, "role": "user",
+         "text": text, "tool": None, "ts": ts}
+        for i, text in enumerate(ALIAS_TEXTS)]
 
 
 @pytest.fixture(scope="module")
@@ -77,8 +96,11 @@ def test_canonicalization_merges_aliases(result):
     em = {r["surface"]: r["entity_id"]
           for r in result.tables["entity_map"].collect()}
     # dictionary-linked alias pair lands on one entity
-    if "SQuAD" in em and "Stanford Question Answering Dataset" in em:
-        assert em["SQuAD"] == em["Stanford Question Answering Dataset"]
+    assert em["SQuAD"] == em["Stanford Question Answering Dataset"] \
+        == "ent_squad"
+    # a near-duplicate of a linked surface joins its cluster through LSH
+    assert em["Penn Treebank V2"] == em["Penn Treebank"] \
+        == "ent_penn_treebank"
     # every surface got an entity id
     assert all(v for v in em.values())
 
@@ -330,3 +352,73 @@ def test_bucketed_input_chunks_identical_and_shuffle_free(spark, tmp_path):
         assert "BroadcastExchange" in p  # routing joins stay broadcast
     finally:
         spark.sql("DROP TABLE IF EXISTS t_bucketed_test")
+
+
+def test_stage_starts_when_its_inputs_commit():
+    """The runner starts a stage once the stages it reads have committed,
+    while an unrelated slow stage is still running: "slow" waits for
+    "child" to start, which a wave-by-wave runner would never do."""
+    import threading
+
+    from master_project_spark.pipeline import _StageRunner
+
+    class FakeIO:
+        def commit(self, df, name, snapshot_id, partition_by=None):
+            return {"rows": 0, "n_files": 0, "files": []}
+
+        def read(self, spark, name):
+            return f"table:{name}"
+
+    child_started = threading.Event()
+
+    def slow(t):
+        assert child_started.wait(timeout=30), "child waited for slow"
+        return None
+
+    def child(t):
+        assert t == {"fast": "table:fast"}
+        child_started.set()
+        return None
+
+    st = _StageRunner(None, FakeIO(), "token", False, "run")
+    done = st.run_stages([
+        ("slow", [], slow, {}),
+        ("fast", [], lambda t: None, {}),
+        ("child", ["fast"], child, {}),
+    ])
+    assert done == {n: f"table:{n}" for n in ("slow", "fast", "child")}
+    assert {m["stage"] for m in st.metrics} == {"slow", "fast", "child"}
+
+
+def test_resume_skipping_verification_collects_no_vocabulary(
+        spark, tmp_path, monkeypatch):
+    """A resume that skips verified_triples never builds its verify UDF,
+    so the alias vocabulary is neither collected nor broadcast."""
+    from master_project_spark import pipeline
+
+    t = transcripts_df(spark, 4, 4, seed=7)
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, t, out, alias_df(spark), with_chunks=False,
+                 snapshot_token="s")
+    (tmp_path / "kg" / "edges._manifest.json").unlink()
+
+    def refuse(*args):
+        raise AssertionError("verify_udf_for called on a skipped stage")
+
+    monkeypatch.setattr(pipeline, "verify_udf_for", refuse)
+    res = run_pipeline(spark, t, out, alias_df(spark), with_chunks=False,
+                       snapshot_token="s")
+    skipped = {m["stage"] for m in res.metrics if m["skipped"]}
+    assert "verified_triples" in skipped and "edges" not in skipped
+
+
+def test_run_metrics_append_runs_no_python(spark):
+    """The run_metrics rows reach the JVM as Arrow: no Python RDD scan."""
+    from master_project_spark.pipeline import run_metrics_df
+
+    df = run_metrics_df(spark, [{
+        "run_id": "r", "stage": "s", "snapshot_id": "", "skipped": False,
+        "rows_out": 3, "n_files": 1, "wall_ms": 1.5, "files_json": "[]"}])
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in p and "PythonRDD" not in p, p
+    assert df.collect()[0]["rows_out"] == 3

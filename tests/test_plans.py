@@ -96,6 +96,9 @@ def test_lsh_pairs_plan_reads_checkpointed_signatures(spark):
     p = plan(pairs, mode="extended")
     assert "EvalPython" not in p
     assert "ExistingRDD" in p
+    # the bucket sizes ride the checkpoint: no side of the self-join
+    # recomputes them
+    assert not re.search(r"Aggregate \[band_idx", p), p
 
 
 def test_pipeline_link_stage_broadcasts(spark):

@@ -83,3 +83,33 @@ def test_resume_false_skips_fingerprint_scan(spark, tmp_path):
                      resume=False, with_chunks=False)
     ident = [m for m in r.metrics if m["stage"] == "_input_identity"][0]
     assert '"fingerprint_scanned": false' in ident["files_json"]
+
+
+def test_read_of_committed_table_runs_no_job(spark, tmp_path):
+    """Opening a committed table uses the manifest's schema: no schema
+    inference job, for a partitioned table and for an empty partitioned
+    commit (which has no data files at all)."""
+    import time
+
+    io = TableIO(tmp_path)
+    df = spark.range(6).withColumn("batch", F.lit("b0"))
+    io.commit(df, "full", "s1", partition_by=["batch"])
+    io.commit(df.limit(0), "empty", "s1", partition_by=["batch"])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("tableio_read", "read committed tables")
+    try:
+        full, empty = io.read(spark, "full"), io.read(spark, "empty")
+        # a marker job: the listener sees jobs in submission order, so once
+        # it is visible any job the reads started is visible too
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup("tableio_read")):
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    assert len(ids) == 1, ids
+    assert full.columns == empty.columns == ["id", "batch"]
+    assert sorted(r["id"] for r in full.collect()) == list(range(6))
+    assert empty.count() == 0
