@@ -134,8 +134,7 @@ def union_find_roots(pairs) -> dict[str, str]:
 
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
-                         use_graphframes: bool | str = "auto",
-                         stats: dict | None = None) -> DataFrame:
+                         use_graphframes: bool | str = "auto") -> DataFrame:
     """Connected components with a min-label per component. vertices:
     (skey, init_label); edges: (ka, kb) undirected. Returns
     (skey, entity_label), entity_label = the lexicographic MIN init_label
@@ -146,8 +145,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     (identical output either path). The dependency-free default collects
     the edges to the driver once and merges them with ``union_find_roots``:
     the edges are verified LSH pairs, a list the size of the near-duplicate
-    vocabulary, not of the data. ``stats``, when given, receives the
-    number of edges as ``lsh_pairs``."""
+    vocabulary, not of the data."""
     if use_graphframes is True or (use_graphframes == "auto"
                                    and graphframes_available()):
         from graphframes import GraphFrame
@@ -160,8 +158,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         # pass). Provision one on demand, rooted in spark.local.dir so it
         # lands on the fast local disk, not the warehouse.
         ensure_checkpoint_dir(vertices.sparkSession)
-        if stats is not None:
-            stats["lsh_pairs"] = edges.count()
         cc = g.connectedComponents()
         labels = (cc.groupBy("component")
                   .agg(F.min("init_label").alias("label"))
@@ -169,9 +165,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                   .select(F.col("id").alias("skey"), "label"))
         return labels.withColumnRenamed("label", "entity_label")
 
+    return _union_find_labels(vertices, edges)[0]
+
+
+def _union_find_labels(vertices: DataFrame,
+                       edges: DataFrame) -> tuple[DataFrame, int]:
+    """connected_components' union-find path; also returns the number of
+    edges it collected."""
     pairs = edges.select("ka", "kb").collect()
-    if stats is not None:
-        stats["lsh_pairs"] = len(pairs)
     roots = union_find_roots(pairs)
     # an Arrow table is read by the JVM alone; a list of tuples would
     # become a Python RDD that runs Python tasks in every job reading it
@@ -179,11 +180,12 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         {"skey": list(roots), "root": list(roots.values())},
         pa.schema([("skey", pa.string()), ("root", pa.string())])))
     # keys in no pair are their own root, so they keep their own label
-    return (vertices.groupBy("skey")
-            .agg(F.min("init_label").alias("label"))
-            .join(root_of, "skey", "left")
-            .select("skey", F.min("label").over(Window.partitionBy(
-                F.coalesce("root", "skey"))).alias("entity_label")))
+    labels = (vertices.groupBy("skey")
+              .agg(F.min("init_label").alias("label"))
+              .join(root_of, "skey", "left")
+              .select("skey", F.min("label").over(Window.partitionBy(
+                  F.coalesce("root", "skey"))).alias("entity_label")))
+    return labels, len(pairs)
 
 
 def build_entity_map(surfaces: DataFrame, alias_dict: DataFrame,
@@ -200,9 +202,14 @@ def build_entity_map(surfaces: DataFrame, alias_dict: DataFrame,
         .localCheckpoint(eager=True)
     pairs, n_dropped = lsh_candidate_pairs(
         vertices, max_bucket=max_bucket, min_agree=min_agree)
-    stats = {"lsh_buckets_dropped": n_dropped}
-    labels = connected_components(
-        vertices.select("skey", "init_label"), pairs, stats=stats)
+    vertices_cc = vertices.select("skey", "init_label")
+    if graphframes_available():
+        # materialize once: counted here, read by every GraphFrames pass
+        pairs = pairs.localCheckpoint(eager=True)
+        labels = connected_components(vertices_cc, pairs)
+        n_pairs = pairs.count()
+    else:
+        labels, n_pairs = _union_find_labels(vertices_cc, pairs)
     entity_map = (
         vertices.select("surface", "skey")
         .join(labels, "skey")
@@ -214,4 +221,5 @@ def build_entity_map(surfaces: DataFrame, alias_dict: DataFrame,
                                 F.expr("substring(entity_label, 2)")))
             .alias("entity_id"))
     )
-    return entity_map, stats
+    return entity_map, {"lsh_buckets_dropped": n_dropped,
+                        "lsh_pairs": n_pairs}

@@ -217,8 +217,7 @@ def alias_df(spark, seed: int = 42):
     reads it alone (a list of tuples would become a Python RDD, and every
     job reading the dictionary would run Python tasks)."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = pa.schema([("alias", pa.string()), ("canonical_id", pa.string()),
-                        ("prior", pa.float64())])
-    return spark.createDataFrame(
-        pa.Table.from_pylist(gen_alias_dict(seed), schema=schema))
+    return spark.createDataFrame(pa.Table.from_pylist(
+        gen_alias_dict(seed), schema=to_arrow_schema(alias_spark_schema())))

@@ -382,33 +382,25 @@ class _StageRunner:
     def run_stages(self, stages: list[tuple]) -> dict[str, DataFrame]:
         """Commit each stage, on its own thread, as soon as its inputs are
         committed or skip-resumed. A stage is ``(name, inputs, compute,
-        kwargs)``: ``compute`` gets the tables named in ``inputs`` by name;
-        ``kwargs`` go to ``run``. FAIR scheduling (session.py) fills one
-        stage's slot-idle gaps with another's tasks. After a failure no
-        further stage starts, and the first error is raised."""
-        from concurrent.futures import (FIRST_COMPLETED, ThreadPoolExecutor,
-                                        wait)
+        kwargs)``, listed after the stages it reads: ``compute`` gets the
+        tables named in ``inputs`` by name; ``kwargs`` go to ``run``. FAIR
+        scheduling (session.py) fills one stage's slot-idle gaps with
+        another's tasks. A stage whose input failed raises that error
+        without running; the first error in list order is raised."""
+        from concurrent.futures import ThreadPoolExecutor
 
         # one scheduler pool per stage did not beat the shared default
         # pool in 3 interleaved A/B pairs (r6, OPTIMIZATION_r06.md)
-        done: dict[str, DataFrame] = {}
-        waiting, running = list(stages), {}
+        futs = {}
+
+        def stage(name, inputs, compute, kw):
+            tables = {i: futs[i].result() for i in inputs}
+            return self.run(name, partial(compute, tables), **kw)
+
         with ThreadPoolExecutor(max_workers=len(stages)) as ex:
-            while waiting or running:
-                for spec in [s for s in waiting
-                             if all(i in done for i in s[1])]:
-                    waiting.remove(spec)
-                    name, inputs, compute, kw = spec
-                    tables = {i: done[i] for i in inputs}
-                    running[ex.submit(self.run, name,
-                                      partial(compute, tables), **kw)] = name
-                if not running:
-                    raise ValueError("stages with inputs that no stage "
-                                     f"commits: {[s[0] for s in waiting]}")
-                finished, _ = wait(running, return_when=FIRST_COMPLETED)
-                for f in finished:
-                    done[running.pop(f)] = f.result()
-        return done
+            for spec in stages:
+                futs[spec[0]] = ex.submit(stage, *spec)
+            return {name: f.result() for name, f in futs.items()}
 
     def snapshot_id(self, name: str, extra: str = "") -> str:
         return hashlib.sha256(

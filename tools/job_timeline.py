@@ -1,6 +1,6 @@
 """Print one line per Spark job from an event log.
 
-    python tools/job_timeline.py <event-log dir or file> [--group PREFIX]
+    python tools/job_timeline.py <event-log dir>
 
 For each job: its id, start offset from the application start and
 duration (seconds), job group, call site, and ``py`` when any of its
@@ -19,16 +19,13 @@ import os
 import sys
 
 
-def events(path: str):
-    """The JSON events of a log file, or of every log file under a
-    directory (rolling ``eventlog_v2_*`` logs included), in order."""
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(glob.glob(os.path.join(path, "eventlog_v2_*",
-                                              "events_*"))
-                       or [p for p in glob.glob(os.path.join(path, "*"))
-                           if os.path.isfile(p)])
+def events(log_dir: str):
+    """The JSON events of every log file under an event-log directory
+    (rolling ``eventlog_v2_*`` logs included), in order."""
+    files = sorted(glob.glob(os.path.join(log_dir, "eventlog_v2_*",
+                                          "events_*"))
+                   or [p for p in glob.glob(os.path.join(log_dir, "*"))
+                       if os.path.isfile(p)])
     for f in files:
         with open(f) as fh:
             for line in fh:
@@ -36,11 +33,11 @@ def events(path: str):
                     yield json.loads(line)
 
 
-def jobs(path: str) -> list[dict]:
+def jobs(log_dir: str) -> list[dict]:
     """One row per job, in id order: id, start offset and duration in
     seconds, group, call site, python flag."""
     app_start, rows = None, {}
-    for ev in events(path):
+    for ev in events(log_dir):
         kind = ev.get("Event")
         if kind == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"] / 1000
@@ -74,12 +71,8 @@ def jobs(path: str) -> list[dict]:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("log", help="event-log directory or file")
-    ap.add_argument("--group", default=None,
-                    help="only jobs whose group starts with this prefix")
-    args = ap.parse_args(argv)
-    rows = [r for r in jobs(args.log)
-            if args.group is None or r["group"].startswith(args.group)]
+    ap.add_argument("log_dir", help="event-log directory")
+    rows = jobs(ap.parse_args(argv).log_dir)
     print(f"{'job':>5} {'start_s':>8} {'dur_s':>7}  {'py':2}  "
           f"{'group':24} call site")
     for r in rows:
