@@ -18,19 +18,25 @@ Design (round-2 rework per VERDICT #2 / ADVICE):
   TableIO.commit's partition-replacing mode, and rewrites ONLY the old
   partitions that contained re-processed conversations (their stale rows
   are dropped by an anti-join). Every derived table is built by the same
-  pipeline.py builder the full run uses.
+  pipeline.py builder the full run uses, and the per-conversation tables
+  commit through the full run's stage runner (_StageRunner.run_stages):
+  each stage starts once the stages it reads have committed. Only a
+  rewrite of touched partitions, which reads the table it replaces, is
+  checkpointed before its commit (and verified_triples when partitions are
+  touched, so the verify UDF runs once).
   Work is O(delta + touched partitions); untouched partitions are never
   read or written — asserted by tests on file mtimes.
 - The batch id is a deterministic hash of the delta's conversation set, so
   a crash-retry recomputes the SAME batch and the partition overwrite is
   idempotent — no duplicate rows can survive a retry (the round-1 design
   needed a full-table dropDuplicates for this; gone).
-- The ledger commits LAST (round-3 fix, ADVICE high): every other table —
-  graph merge included — is either idempotent under the deterministic
-  batch id or guarded by a per-table snapshot check, so a kill anywhere
-  leaves the retry able to redo exactly the missing work. The ledger is
-  the one commit that makes the next call see an empty delta, so it must
-  be the commit point of the whole append.
+- The ledger commits LAST (round-3 fix, ADVICE high), after the runner's
+  stages and then the graph merge: every other table is either idempotent
+  under the deterministic batch id or guarded by a per-table snapshot
+  check, so a kill or a failed stage anywhere leaves the retry able to redo
+  exactly the missing work. The ledger is the one commit that makes the
+  next call see an empty delta, so it must be the commit point of the
+  whole append.
 - Graph tables (entity_map / nodes / edges) merge incrementally on the
   append-only path: new surfaces get exact-match assignment (alias-dict
   hit, else exact canonical-key hit, else a fresh singleton entity) and the
@@ -50,16 +56,15 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .canonicalize import build_entity_map
-from .pipeline import (ALIAS_CAP, append_run_metrics, chunk_stage_df,
-                       conv_stats_df, corpus_df, edges_df, extracted_df,
-                       gated_turns, linked_mentions_df, mentions_df, nodes_df,
-                       surfaces_df, triples_df, verified_triples_df,
-                       verify_udf_for)
+from .pipeline import (ALIAS_CAP, _StageRunner, append_run_metrics,
+                       chunk_stage_df, conv_stats_df, corpus_df, edges_df,
+                       extracted_df, gated_turns, linked_mentions_df,
+                       mentions_df, nodes_df, surfaces_df, triples_df,
+                       verified_triples_df, verify_udf_for)
 from .tableio import TableIO
 from .udfs import canonical_key_udf
 
@@ -68,26 +73,6 @@ LEDGER = "processed_convs"
 #: new_surfaces / existing_surfaces above this triggers a full LSH
 #: re-canonicalization instead of exact-match incremental assignment
 REBUILD_THRESHOLD = 0.2
-
-
-def _ledger(spark: SparkSession, io: TableIO) -> DataFrame | None:
-    path = io._data_dir(LEDGER)
-    if not Path(path).exists():
-        return None
-    return io.read(spark, LEDGER)
-
-
-def _batch_id(todo: DataFrame) -> str:
-    """Deterministic batch id from the delta conversation set: a crash
-    retry recomputes the same id, making the partition overwrite
-    idempotent."""
-    row = todo.select(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(conv_id, cur_n))").alias("h"),
-        F.expr("sum(cast(xxhash64(conv_id, cur_n) as decimal(38,0)))")
-        .alias("s")).collect()[0]
-    return "b" + hashlib.sha256(
-        f"{row['n']}:{row['h']}:{row['s']}".encode()).hexdigest()[:12]
 
 
 def append_new_conversations(spark: SparkSession, transcripts: DataFrame,
@@ -100,123 +85,136 @@ def append_new_conversations(spark: SparkSession, transcripts: DataFrame,
     io = TableIO(out_dir)
     n_part = extract_partitions or spark.sparkContext.defaultParallelism * 4
 
-    # ---- delta discovery: per-conv turn counts vs the ledger
+    def has(name: str) -> bool:
+        """True when the output dir holds table ``name``, judged by its data
+        directory: a failed commit leaves the table without a manifest."""
+        return io._data_dir(name).exists()
+
+    # ---- delta discovery: per-conv turn counts vs the ledger, summarized
+    # in one driver action
     cur = transcripts.groupBy("conv_id").agg(F.count(F.lit(1)).alias("cur_n"))
-    ledger = _ledger(spark, io)
-    if ledger is None:
+    if not has(LEDGER):
         joined = cur.select("conv_id", "cur_n",
                             F.lit(None).cast("long").alias("old_n"),
                             F.lit(None).cast("string").alias("old_batch"))
     else:
-        led = ledger.select("conv_id", F.col("n_turns").alias("old_n"),
-                            F.col("batch").alias("old_batch"))
+        led = io.read(spark, LEDGER).select(
+            "conv_id", F.col("n_turns").alias("old_n"),
+            F.col("batch").alias("old_batch"))
         joined = cur.join(led, "conv_id", "left")
     todo = (joined.filter("old_n IS NULL OR old_n <> cur_n")
             .localCheckpoint(eager=True))
     agg = todo.agg(
         F.sum(F.when(F.col("old_n").isNull(), 1).otherwise(0)).alias("new"),
         F.sum(F.when(F.col("old_n").isNotNull(), 1).otherwise(0)).alias("grown"),
+        F.expr("bit_xor(xxhash64(conv_id, cur_n))").alias("h"),
+        F.expr("sum(cast(xxhash64(conv_id, cur_n) as decimal(38,0)))")
+        .alias("s"),
+        F.collect_set("old_batch").alias("touched"),
     ).collect()[0]
     n_new, n_grown = int(agg["new"] or 0), int(agg["grown"] or 0)
     if n_new + n_grown == 0:
         return {"new_convs": 0, "grown_convs": 0, "new_rows": 0,
                 "touched_batches": 0, "graph_rebuilt": False}
 
-    batch = _batch_id(todo)
-    snapshot = f"incremental:{batch}"
+    # deterministic batch id from the delta conversation set: a crash retry
+    # recomputes the same id, making every partition overwrite idempotent
+    batch = "b" + hashlib.sha256(
+        f"{n_new + n_grown}:{agg['h']}:{agg['s']}".encode()).hexdigest()[:12]
+    touched = sorted(agg["touched"])
     todo_ids = todo.select("conv_id")
-    touched = sorted(r["old_batch"] for r in todo
-                     .filter("old_batch IS NOT NULL")
-                     .select("old_batch").distinct().collect())
 
-    def commit(name: str, df: DataFrame) -> None:
-        """Replace the delta batch and the touched old partitions of
-        ``name`` (TableIO.commit's partition-replacing mode). The
-        checkpoint breaks ``df``'s read of the table it replaces."""
-        io.commit(df.localCheckpoint(eager=True), name, snapshot,
-                  partition_by=["batch"], replace_partitions=touched)
+    def rewrite(name: str, delta_df: DataFrame) -> DataFrame:
+        """The delta batch plus the touched old partitions of ``name``
+        minus their re-processed conversations. That union reads the table
+        it replaces, so it is checkpointed before the commit."""
+        delta_df = delta_df.withColumn("batch", F.lit(batch))
+        if not touched:
+            return delta_df
+        old = (io.read(spark, name)
+               .filter(F.col("batch").isin(touched))
+               .join(todo_ids, "conv_id", "left_anti")
+               .select(*delta_df.columns))
+        return delta_df.unionByName(old).localCheckpoint(eager=True)
 
-    def rewrite(name: str, delta_df: DataFrame) -> None:
-        """delta batch + anti-joined rewrite of touched old partitions."""
-        full = delta_df
-        if touched:
-            old = (io.read(spark, name)
-                   .filter(F.col("batch").isin(touched))
-                   .join(todo_ids, "conv_id", "left_anti")
-                   .select(*delta_df.columns))
-            full = full.unionByName(old)
-        commit(name, full)
+    def changed(df: DataFrame) -> DataFrame:
+        """The delta + rewritten old partitions of a committed table."""
+        return df.filter(F.col("batch").isin([batch] + touched))
 
-    def changed(name: str) -> DataFrame:
-        """The committed delta + rewritten old partitions of ``name``."""
-        return io.read(spark, name).filter(
-            F.col("batch").isin([batch] + touched))
+    def verified(t):
+        df = verified_triples_df(triples_df(changed(t["extracted"])),
+                                 verify_udf_for(spark, alias_dict))
+        # with touched partitions TableIO.commit collects the batches in
+        # df before it writes: uncheckpointed, the verify UDF runs in both
+        return df.localCheckpoint(eager=True) if touched else df
 
-    # ---- extract ONLY the delta conversations (same JVM cue-gate
-    # prefilter as the full pipeline: gate-rejected turns emit no rows)
+    def conv_stats(t):
+        cs = conv_stats_df(delta_transcripts)
+        if "nd_turn_idx" not in io.read(spark, "conv_stats").columns:
+            # pre-widening table (round <=2 schema): mixed-schema
+            # partitions resolve nondeterministically under plain
+            # spark.read.parquet, so the delta keeps the old columns until
+            # the next full rebuild of the table (ADVICE round-4 low)
+            cs = cs.select("conv_id", "n_turns", "n_chars", "first_ts",
+                           "last_ts")
+        return rewrite("conv_stats", cs)
+
+    # ---- the per-conversation tables, through the pipeline's stage runner:
+    # only the delta conversations are extracted and chunked (same JVM
+    # cue-gate prefilter as the full pipeline); derived tables project the
+    # changed partitions of the committed extracted/chunks tables. Tables
+    # the output dir never had stay absent.
     delta_transcripts = transcripts.join(todo_ids, "conv_id", "left_semi")
     delta_turns = gated_turns(spark, delta_transcripts) \
         .repartition(n_part, "conv_id", "turn_idx")
-    rewrite("extracted",
-            extracted_df(delta_turns).withColumn("batch", F.lit(batch)))
-
-    # ---- derived per-conversation tables: project the changed partitions
-    # of the committed extracted table (delta + rewritten old batches)
-    changed_ex = changed("extracted")
-    new_rows = changed_ex.filter(F.col("batch") == batch).count()
-    commit("triples", triples_df(changed_ex))
-    commit("mentions", mentions_df(changed_ex))
-    commit("linked_mentions",
-           linked_mentions_df(changed("mentions"), alias_dict))
-    if io.manifest("verified_triples") is not None:
-        commit("verified_triples",
-               verified_triples_df(changed("triples"),
-                                   verify_udf_for(spark, alias_dict)))
-
-    # ---- conversation-level tables (chunks/corpus/conv_stats/ledger):
-    # recompute the DELTA conversations only + touched-partition rewrite
-    if io.manifest("chunks") is not None:
-        rewrite("chunks", chunk_stage_df(delta_transcripts)
-                .withColumn("batch", F.lit(batch)))
-        if io.manifest("corpus") is not None:
-            commit("corpus", corpus_df(changed("chunks")))
-    if io.manifest("conv_stats") is not None:
-        cs = conv_stats_df(delta_transcripts)
-        committed_cols = io.read(spark, "conv_stats").columns
-        if "nd_turn_idx" not in committed_cols:
-            # pre-widening table (round <=2 schema): keep the delta's
-            # schema consistent with it — mixed-schema partitions resolve
-            # nondeterministically under plain spark.read.parquet (ADVICE
-            # round-4 low). The order-check columns reappear on the next
-            # full rebuild of the table.
-            cs = cs.select("conv_id", "n_turns", "n_chars", "first_ts",
-                           "last_ts")
-        rewrite("conv_stats", cs.withColumn("batch", F.lit(batch)))
+    part = {"partition_by": ["batch"], "replace_partitions": touched}
+    stages = [("extracted", [],
+               lambda t: rewrite("extracted", extracted_df(delta_turns)),
+               part)]
+    if has("chunks"):
+        stages.append(("chunks", [], lambda t: rewrite(
+            "chunks", chunk_stage_df(delta_transcripts)), part))
+    if has("conv_stats"):
+        stages.append(("conv_stats", [], conv_stats, part))
+    stages += [
+        ("triples", ["extracted"],
+         lambda t: triples_df(changed(t["extracted"])), part),
+        ("mentions", ["extracted"],
+         lambda t: mentions_df(changed(t["extracted"])), part),
+        ("linked_mentions", ["extracted"],
+         lambda t: linked_mentions_df(mentions_df(changed(t["extracted"])),
+                                      alias_dict), part),
+    ]
+    if has("verified_triples"):
+        stages.append(("verified_triples", ["extracted"], verified, part))
+    if has("chunks") and has("corpus"):
+        stages.append(("corpus", ["chunks"],
+                       lambda t: corpus_df(changed(t["chunks"])), part))
+    st = _StageRunner(spark, io, f"incremental:{batch}", resume=False,
+                      run_id="incremental")
+    st.run_stages(stages)
+    new_rows = sum(f["rows"] for f in io.manifest("extracted")["files"]
+                   if f["file"].startswith(f"batch={batch}/"))
 
     # ---- graph tables: incremental merge, or full re-canonicalization
     rebuilt = _merge_graph(spark, io, alias_dict, batch, touched,
                            rebuild_threshold)
 
-    # ---- ledger LAST (crash contract): the ledger is what makes the next
-    # call see an empty delta, so it must only commit once every sibling
-    # table INCLUDING the graph is consistent. A kill anywhere above leaves
-    # the old ledger in place; the retry recomputes the same deterministic
-    # batch and every rewrite above is an idempotent partition overwrite
-    # (the graph merge is retry-safe via per-table snapshot guards in
-    # _merge_graph). Committing the ledger before the graph merge — the
-    # round-2 ordering — left a window where a kill made the retry compute
-    # an empty delta and return, silently stranding the graph tables stale.
-    rewrite(LEDGER, todo.select(
-        "conv_id", F.col("cur_n").alias("n_turns"),
-        F.lit(batch).alias("batch")))
+    # ---- ledger LAST (crash contract): it makes the next call see an empty
+    # delta, so it commits only once every sibling table INCLUDING the
+    # graph is consistent. Committed before the graph merge (the round-2
+    # order), a kill in between left the retry an empty delta and the
+    # graph tables silently stale.
+    st.run(LEDGER, lambda: rewrite(LEDGER, todo.select(
+        "conv_id", F.col("cur_n").alias("n_turns"))), **part)
 
     metrics = {
         "batch": batch, "new_convs": n_new, "grown_convs": n_grown,
-        "new_rows": int(new_rows), "touched_batches": len(touched),
+        "new_rows": new_rows, "touched_batches": len(touched),
         "graph_rebuilt": rebuilt,
         "wall_ms": round((time.perf_counter() - t0) * 1000, 3),
     }
-    append_run_metrics(spark, out_dir, [{
+    append_run_metrics(spark, out_dir, st.metrics + [{
         "run_id": "incremental", "stage": "incremental_append",
         "snapshot_id": batch, "skipped": False, "rows_out": new_rows,
         "n_files": len(touched), "wall_ms": metrics["wall_ms"],

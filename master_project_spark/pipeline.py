@@ -386,8 +386,14 @@ class _StageRunner:
         tables named in ``inputs`` by name; ``kwargs`` go to ``run``. FAIR
         scheduling (session.py) fills one stage's slot-idle gaps with
         another's tasks. A stage whose input failed raises that error
-        without running; the first error in list order is raised."""
+        without running; the first error in list order is raised.
+
+        Each stage thread starts with its own copy of the caller's
+        thread-local properties (job group, description, scheduler pool):
+        under PySpark's pinned-thread mode a new thread has none."""
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
 
         # one scheduler pool per stage did not beat the shared default
         # pool in 3 interleaved A/B pairs (r6, OPTIMIZATION_r06.md)
@@ -399,7 +405,12 @@ class _StageRunner:
 
         with ThreadPoolExecutor(max_workers=len(stages)) as ex:
             for spec in stages:
-                futs[spec[0]] = ex.submit(stage, *spec)
+                # wrapping clones the properties, once per stage: a copy
+                # shared by all threads would carry one stage's job group
+                # into another's jobs
+                target = (stage if self.spark is None
+                          else inheritable_thread_target(self.spark)(stage))
+                futs[spec[0]] = ex.submit(target, *spec)
             return {name: f.result() for name, f in futs.items()}
 
     def snapshot_id(self, name: str, extra: str = "") -> str:
@@ -411,11 +422,13 @@ class _StageRunner:
         run() would skip-resume it)."""
         return self.io.is_committed(name, self.snapshot_id(name, extra))
 
-    def run(self, name: str, compute, partition_by: list[str] | None = None,
-            extra: str = "", force: bool = False) -> DataFrame:
+    def run(self, name: str, compute, extra: str = "", force: bool = False,
+            **commit_kw) -> DataFrame:
         """``force=True`` recomputes even when the snapshot is current —
         for stages whose side-products feed a SIBLING commit that is
-        missing or stale (the fixpoint/chunk_embeddings pair)."""
+        missing or stale (the fixpoint/chunk_embeddings pair).
+        ``commit_kw`` (``partition_by``, ``replace_partitions``) go to
+        ``TableIO.commit``."""
         snapshot_id = self.snapshot_id(name, extra)
         t0 = time.perf_counter()
         if self.resume and not force and self.io.is_committed(name,
@@ -430,8 +443,7 @@ class _StageRunner:
             })
             return self.io.read(self.spark, name)
         df = compute()
-        manifest = self.io.commit(df, name, snapshot_id,
-                                  partition_by=partition_by)
+        manifest = self.io.commit(df, name, snapshot_id, **commit_kw)
         self.metrics.append({
             "run_id": self.run_id, "stage": name, "snapshot_id": snapshot_id,
             "skipped": False, "rows_out": manifest["rows"],

@@ -62,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
         n_triples = spark.read.parquet(f"{args.out}/triples").count()
         print(json.dumps({
             "mode": "incremental", "new_convs": res["new_convs"],
-            "extracted_rows_total": res["new_rows"],
+            "new_rows": res["new_rows"],
             "triples_total": n_triples, "wall_sec": round(wall, 3),
         }))
         return 0

@@ -151,8 +151,8 @@ class TableIO:
         whose rows were all dropped would otherwise keep its stale files).
         The removal runs after the write and before the manifest, so a
         crash in between leaves the table uncommitted, never wrong. ``df``
-        must not read the table it replaces (the incremental callers
-        localCheckpoint it first)."""
+        must not read the table it replaces unless it is checkpointed (the
+        append's rewrite of touched partitions is)."""
         path = self._data_dir(name)
         stale: set = set()
         if replace_partitions:

@@ -390,6 +390,42 @@ def test_stage_starts_when_its_inputs_commit():
     assert {m["stage"] for m in st.metrics} == {"slow", "fast", "child"}
 
 
+def test_stage_threads_inherit_the_callers_job_group(spark, tmp_path):
+    """Jobs submitted from the runner's stage threads carry the job group
+    the caller set: no job without a group appears during the run."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def settle(group):
+        """Run a marker job in ``group`` and wait until the listener shows
+        it: it sees jobs in submission order, so every earlier job is then
+        visible too."""
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(group):
+            assert time.monotonic() < deadline
+            time.sleep(0.05)
+
+    t = transcripts_df(spark, 4, 4, seed=5)
+    alias = alias_df(spark)
+    settle("before")
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("caller", "run_pipeline under a job group")
+    try:
+        run_pipeline(spark, t, str(tmp_path / "kg"), alias, resume=False,
+                     with_chunks=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    settle("after")
+    assert tracker.getJobIdsForGroup("caller")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
 def test_resume_skipping_verification_collects_no_vocabulary(
         spark, tmp_path, monkeypatch):
     """A resume that skips verified_triples never builds its verify UDF,
